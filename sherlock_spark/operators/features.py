@@ -7,7 +7,7 @@ subwords get -100, truncation trims label_ids, CLS/padding positions are
 -100 (reference ``token_classification.py:86-146``). One iterator pandas
 UDF; the converter is a per-worker singleton.
 
-Model seam: the stub models are constructed from broadcast dicts today;
+Model seam: the stub models are constructed from small config dicts;
 a real deployment loads tokenizer + weights from a directory. That path
 is production code here:
 
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 from typing import Iterator, Optional
 
 import numpy as np
@@ -41,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sherlock_spark.model_stub import StubNerModel
+from sherlock_spark.operators.rc import MODEL_KEYS, rc_model_udf
 from sherlock_spark.text.bert_like import BertLikeTokenizer
 from sherlock_spark.text.spans import bio_tags_to_spans, spans_to_exclusive_sorted
 from sherlock_spark.text.token_clf import TokenClassificationConverter
@@ -61,11 +63,12 @@ NER_FEATURES_TYPE = T.StructType(
 )
 
 _CONVERTER_CACHE: dict[str, TokenClassificationConverter] = {}
+# NER bundles (RC bundles load through rc.executor_model)
 _BUNDLE_CACHE: dict[str, tuple] = {}
 # per-worker, per-bundle load counters, observable from tests (returned
 # as a column). Keyed by bundle name: a long-lived Python worker serves
-# many stages (NER bundle, RC bundle, ...), so a global count would read
-# N after N distinct bundles even though each loaded exactly once.
+# many stages, so a global count would read N after N distinct bundles
+# even though each loaded exactly once.
 BUNDLE_LOADS: dict[str, int] = {}
 
 
@@ -440,27 +443,27 @@ def _build_rc_model(local_dir: str, labels: list[str]):
 
 
 def _load_rc_bundle(bundle_name: str):
-    """Executor-side one-time load of an RC bundle: labels from the K4
-    vocab file, rules, weights. Backend selection (real HF model vs
-    stub) happens in ``_build_rc_model`` — a real checkpoint in the
-    bundle dir activates torch with zero code change."""
-    cached = _BUNDLE_CACHE.get(bundle_name)
-    if cached is None:
-        local_dir = SparkFiles.get(bundle_name)
-        if not os.path.isdir(local_dir):
-            raise FileNotFoundError(local_dir)
-        with open(os.path.join(local_dir, "converter_label_vocab.txt")) as handle:
-            labels = [line for line in handle.read().splitlines() if line]
-        n_params = 0
-        weights_path = os.path.join(local_dir, "weights.npz")
-        if os.path.exists(weights_path):
-            weights = np.load(weights_path)
-            n_params = int(sum(weights[key].size for key in weights.files))
-        model = _build_rc_model(local_dir, labels)
-        BUNDLE_LOADS[bundle_name] = BUNDLE_LOADS.get(bundle_name, 0) + 1
-        cached = (model, n_params)
-        _BUNDLE_CACHE[bundle_name] = cached
-    return cached
+    """Executor-side load of an RC bundle (once per worker, through
+    ``rc_model_udf``'s model cache): labels from the K4 vocab file.
+    Backend selection (real HF model vs stub) happens in
+    ``_build_rc_model`` — a real checkpoint in the bundle dir activates
+    torch with zero code change."""
+    local_dir = SparkFiles.get(bundle_name)
+    if not os.path.isdir(local_dir):
+        raise FileNotFoundError(local_dir)
+    with open(os.path.join(local_dir, "converter_label_vocab.txt")) as handle:
+        labels = [line for line in handle.read().splitlines() if line]
+    return _build_rc_model(local_dir, labels)
+
+
+def _with_predictions(pairs: DataFrame, forward, probs: bool = False) -> DataFrame:
+    """``pairs`` + ``pred`` + ``model_loads`` (+ ``probs``, the named
+    score map) from an ``rc_model_udf`` over the four model keys."""
+    out = pairs.withColumn("res", forward(*[F.col(k) for k in MODEL_KEYS]))
+    columns = {"pred": F.col("res.label"), "model_loads": F.col("res.model_loads")}
+    if probs:
+        columns["probs"] = F.col("res.logits")
+    return out.withColumns(columns).drop("res")
 
 
 def rc_classify_from_pretrained(
@@ -472,49 +475,13 @@ def rc_classify_from_pretrained(
     subj_text, obj_text); adds ``pred`` (argmax label,
     ``transformers_binary_rc.py:42-46``) and ``model_loads`` (the
     worker's cumulative bundle-load count — 1 after warmup regardless
-    of task count, pinned by tests).
+    of task count, pinned by tests). The forward is ``rc_model_udf``.
     """
     bundle_name = distribute_pretrained(spark, model_dir)
-
-    result_type = T.StructType(
-        [
-            T.StructField("pred", T.StringType()),
-            T.StructField("model_loads", T.IntegerType()),
-        ]
+    forward = rc_model_udf(
+        spark, f"pretrained:{bundle_name}", partial(_load_rc_bundle, bundle_name)
     )
-
-    @F.pandas_udf(result_type)
-    def forward(
-        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]]
-    ) -> Iterator[pd.DataFrame]:
-        # resolve through the module at runtime (cloudpickle captures
-        # module-level dict globals by value — see ner path note)
-        from sherlock_spark.operators import features as _feats
-
-        model, _n_params = _feats._load_rc_bundle(bundle_name)
-        loads = _feats.BUNDLE_LOADS.get(bundle_name, 0)
-        labels_list = model.labels
-        for st, ot, sx, ox in batches:
-            logits = model.forward_pairs(list(zip(st, ot, sx, ox)))
-            preds = [labels_list[int(i)] for i in logits.argmax(axis=1)]
-            yield pd.DataFrame(
-                {"pred": preds, "model_loads": [loads] * len(preds)}
-            )
-
-    out = pairs.withColumn(
-        "res",
-        forward.asNondeterministic()(
-            F.col("subj_type"),
-            F.col("obj_type"),
-            F.col("subj_text"),
-            F.col("obj_text"),
-        ),
-    )
-    return (
-        out.withColumn("pred", F.col("res.pred"))
-        .withColumn("model_loads", F.col("res.model_loads"))
-        .drop("res")
-    )
+    return _with_predictions(pairs, forward)
 
 
 # -- M3: AllenNLP-variant RC annotator seam --------------------------------
@@ -598,41 +565,49 @@ def resolve_allennlp_archive(archive_file: str) -> str:
     return archive_file
 
 
-def _load_allennlp_bundle(archive_name: str):
-    """Executor-side one-time load of an AllenNLP archive: extract the
-    tar.gz, read vocabulary/labels.txt + rules + weights. THE swap point
-    for a real model — replace the StubRcModel construction with
+class ProbsRcModel:
+    """An RC model whose ``forward_pairs`` emits PROBABILITIES — the
+    AllenNLP model's ``outputs["probs"]``, a softmax over the label
+    axis. The argmax (``pred``) is unchanged."""
+
+    def __init__(self, model) -> None:
+        self.model = model
+        self.labels = model.labels
+
+    def forward_pairs(self, pairs: list[tuple[str, str, str, str]]) -> np.ndarray:
+        logits = self.model.forward_pairs(pairs)
+        exp = np.exp(logits - logits.max(axis=1, keepdims=True))
+        return exp / exp.sum(axis=1, keepdims=True)
+
+
+def _load_allennlp_bundle(archive_name: str) -> ProbsRcModel:
+    """Executor-side load of an AllenNLP archive (once per worker,
+    through ``rc_model_udf``'s model cache): extract the tar.gz, read
+    vocabulary/labels.txt + rules. THE swap point for a real model —
+    replace the StubRcModel construction with
     ``allennlp.models.archival.load_archive(local_archive)``."""
     import tarfile
     import tempfile
 
     from sherlock_spark.model_stub import StubRcModel
 
-    cached = _BUNDLE_CACHE.get(archive_name)
-    if cached is None:
-        local_archive = SparkFiles.get(archive_name)
-        if not os.path.exists(local_archive):
-            raise FileNotFoundError(local_archive)
-        extract_dir = tempfile.mkdtemp(prefix="allennlp_archive_")
-        with tarfile.open(local_archive, "r:gz") as tar:
-            try:
-                tar.extractall(extract_dir, filter="data")
-            except TypeError:
-                # pre-backport Python patch releases (<3.11.4 etc.) lack
-                # the filter parameter; the archive is our own content
-                # (shipped by this driver), so plain extract is safe
-                tar.extractall(extract_dir)
-        with open(os.path.join(extract_dir, "vocabulary", "labels.txt")) as f:
-            labels = [line for line in f.read().splitlines() if line]
-        with open(os.path.join(extract_dir, "rc_rules.json")) as f:
-            rules = {tuple(k): v for k, v in json.load(f)}
-        weights = np.load(os.path.join(extract_dir, "weights.npz"))
-        n_params = int(sum(weights[key].size for key in weights.files))
-        model = StubRcModel(labels, rules or None)
-        BUNDLE_LOADS[archive_name] = BUNDLE_LOADS.get(archive_name, 0) + 1
-        cached = (model, n_params)
-        _BUNDLE_CACHE[archive_name] = cached
-    return cached
+    local_archive = SparkFiles.get(archive_name)
+    if not os.path.exists(local_archive):
+        raise FileNotFoundError(local_archive)
+    extract_dir = tempfile.mkdtemp(prefix="allennlp_archive_")
+    with tarfile.open(local_archive, "r:gz") as tar:
+        try:
+            tar.extractall(extract_dir, filter="data")
+        except TypeError:
+            # pre-backport Python patch releases (<3.11.4 etc.) lack
+            # the filter parameter; the archive is our own content
+            # (shipped by this application), so plain extract is safe
+            tar.extractall(extract_dir)
+    with open(os.path.join(extract_dir, "vocabulary", "labels.txt")) as f:
+        labels = [line for line in f.read().splitlines() if line]
+    with open(os.path.join(extract_dir, "rc_rules.json")) as f:
+        rules = {tuple(k): v for k, v in json.load(f)}
+    return ProbsRcModel(StubRcModel(labels, rules or None))
 
 
 def rc_classify_from_allennlp_archive(
@@ -649,7 +624,8 @@ def rc_classify_from_allennlp_archive(
     probability map (``allennlp_binary_rc.py:59-65``);
     ``ignore_no_relation`` drops negative rows like the reference's
     ``combine``. Adds ``model_loads`` (per-worker bundle-load count,
-    1 after warmup, pinned by tests)."""
+    1 after warmup, pinned by tests). The forward is ``rc_model_udf``
+    over a ``ProbsRcModel``."""
     # Every archive resolves to the basename "model.tar.gz", and Spark
     # registers files by basename — two different archives in one
     # session would collide in addFile AND in the worker-side caches.
@@ -670,65 +646,21 @@ def rc_classify_from_allennlp_archive(
     archive_name = f"allennlp-model-{digest}.tar.gz"
     shipped = os.path.join(tempfile.gettempdir(), archive_name)
     if not os.path.exists(shipped):
-        fd, partial = tempfile.mkstemp(
+        fd, staging = tempfile.mkstemp(
             dir=tempfile.gettempdir(), suffix=".tar.gz.partial"
         )
         os.close(fd)
-        shutil.copyfile(archive_path, partial)
-        os.replace(partial, shipped)  # atomic: full content or nothing
+        shutil.copyfile(archive_path, staging)
+        os.replace(staging, shipped)  # atomic: full content or nothing
     _add_file_tolerating_readd(spark, shipped)
 
-    fields = [
-        T.StructField("pred", T.StringType()),
-        T.StructField("model_loads", T.IntegerType()),
-    ]
-    if add_logits:
-        fields.append(
-            T.StructField("probs", T.MapType(T.StringType(), T.DoubleType()))
-        )
-    result_type = T.StructType(fields)
-
-    @F.pandas_udf(result_type)
-    def forward(
-        batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]]
-    ) -> Iterator[pd.DataFrame]:
-        from sherlock_spark.operators import features as _feats
-
-        model, _n_params = _feats._load_allennlp_bundle(archive_name)
-        loads = _feats.BUNDLE_LOADS.get(archive_name, 0)
-        labels_list = model.labels
-        for st, ot, sx, ox in batches:
-            logits = model.forward_pairs(list(zip(st, ot, sx, ox)))
-            # outputs["probs"]: softmax over the label axis
-            shifted = logits - logits.max(axis=1, keepdims=True)
-            exp = np.exp(shifted)
-            probs = exp / exp.sum(axis=1, keepdims=True)
-            idx = probs.argmax(axis=1)
-            out = {
-                "pred": [labels_list[int(i)] for i in idx],
-                "model_loads": [loads] * len(idx),
-            }
-            if add_logits:
-                out["probs"] = [
-                    dict(zip(labels_list, row.tolist())) for row in probs
-                ]
-            yield pd.DataFrame(out)
-
-    out = pairs.withColumn(
-        "res",
-        forward.asNondeterministic()(
-            F.col("subj_type"),
-            F.col("obj_type"),
-            F.col("subj_text"),
-            F.col("obj_text"),
-        ),
+    forward = rc_model_udf(
+        spark,
+        f"allennlp:{archive_name}",
+        partial(_load_allennlp_bundle, archive_name),
+        add_logits,
     )
-    out = out.withColumn("pred", F.col("res.pred")).withColumn(
-        "model_loads", F.col("res.model_loads")
-    )
-    if add_logits:
-        out = out.withColumn("probs", F.col("res.probs"))
-    out = out.drop("res")
+    out = _with_predictions(pairs, forward, probs=add_logits)
     if ignore_no_relation:
         out = out.filter(F.col("pred") != "no_relation")
     return out

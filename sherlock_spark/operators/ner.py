@@ -77,9 +77,11 @@ def _executor_model(cache_key: str, broadcast) -> StubNerModel:
 def words_column(text: Column = None) -> Column:
     """Whitespace word split. The transcript invariant is that ``text``
     is the space-join of its tokens (tacred.py:196), so a literal
-    single-space split reconstructs them exactly.
+    single-space split reconstructs them exactly. A NULL ``text`` (the
+    transcript schema allows it) has no words.
     """
-    return F.split(text if text is not None else F.col("text"), " ")
+    words = F.split(text if text is not None else F.col("text"), " ")
+    return F.coalesce(words, F.array().cast("array<string>"))
 
 
 def _word_offsets(words) -> list[tuple[int, int, str]]:
@@ -178,6 +180,8 @@ def ner_ments_udf(spark: SparkSession, lexicon: dict[str, str] | None = None):
     text moves the same bytes with a fraction of the serialization
     overhead, and the in-Python split costs less than the transfer
     saved (guide §4.1: control how many columns cross, and how).
+
+    A NULL ``text`` has no words and no mentions, like ``words_column``.
     """
     lex = StubNerModel(lexicon).lexicon if lexicon is None else lexicon
     cache_key = "ner-ments-text:" + config_hash(lex)
@@ -189,7 +193,9 @@ def ner_ments_udf(spark: SparkSession, lexicon: dict[str, str] | None = None):
         def ments(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
             model = _executor_model(cache_key, broadcast)
             for series in batches:
-                token_lists = [text.split(" ") for text in series]
+                token_lists = [
+                    [] if text is None else text.split(" ") for text in series
+                ]
                 tag_lists = model.predict_tags(token_lists)
                 yield pd.Series(
                     [

@@ -123,14 +123,15 @@ class HfRcModel:
     ``forward_pairs`` interface.
 
     Input text per pair is the typed pair key
-    ``"<subj_type> <subj_text> [SEP] <obj_type> <obj_text>"`` — the
-    model-only UDF path deliberately ships four scalar strings per pair
-    (feature bookkeeping is JVM-side); a model trained on fully marked
-    sentences runs through the legacy full-conversion UDF
-    (``rc.rc_classify_udf``) instead. Output logits are re-ordered to
-    the BUNDLE's label vocabulary (``converter_label_vocab.txt``) via
-    the checkpoint's ``label2id`` so the annotator's argmax decode
-    (``transformers_binary_rc.py:42-46``) works unchanged."""
+    ``"<subj_type> <subj_text> [SEP] <obj_type> <obj_text>"``: every RC
+    model call (``rc.rc_model_udf``) ships exactly four scalar strings
+    per pair, and feature bookkeeping is JVM-side, so no model — stub or
+    real — ever sees a marked sentence. A checkpoint trained on marked
+    sentences needs those inputs built first. Output logits are
+    re-ordered to the BUNDLE's label vocabulary
+    (``converter_label_vocab.txt``) via the checkpoint's ``label2id`` so
+    the annotator's argmax decode (``transformers_binary_rc.py:42-46``)
+    works unchanged."""
 
     def __init__(
         self,

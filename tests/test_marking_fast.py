@@ -114,8 +114,8 @@ def test_full_length_matches_slow_tokens():
 
 
 def test_overlapping_mentions_parity():
-    """Overlapping head/tail spans (possible via the legacy UDF path on
-    TACRED-style data): the reference's if/elif assigns overlap tokens
+    """Overlapping head/tail spans (possible on TACRED-style data): the
+    reference's if/elif assigns overlap tokens
     to head only — the closed forms must clip the union once, not
     subtract each span independently.
     """

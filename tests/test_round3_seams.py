@@ -243,7 +243,11 @@ def test_dedup_model_inputs_identical_results(spark):
     from sherlock_spark.operators.rc import extract_triples
     from sherlock_spark.sources.transcripts import synth_transcripts_from_fixtures
 
-    t = synth_transcripts_from_fixtures(spark, n_convs=6, turns_per_conv=10)
+    from fixture_text import IN_REPO_SENTENCES
+
+    t = synth_transcripts_from_fixtures(
+        spark, n_convs=6, turns_per_conv=10, sentences=IN_REPO_SENTENCES
+    )
     ann = annotate_mentions(spark, t, FIXTURE_NER_LEXICON)
     kwargs = dict(
         entity_handling="mark_entity", max_length=None, max_mentions=16,
