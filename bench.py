@@ -21,8 +21,9 @@ def main() -> None:
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    # cross-process warm resume (udfcache._stage_persistent): stage
-    # tables persist as code-digest-keyed parquet, so a SECOND fresh-JVM
+    # cross-process warm resume (udfcache.stage through the durable
+    # stage writer, plans/checkpoint.CheckpointManager): stage tables
+    # persist as code-digest-keyed parquet, so a SECOND fresh-JVM
     # bench run against the same dataset resumes warm instead of paying
     # the 11-15 s kg_canonical_edges re-materialization. First run on
     # new code still pays full cost (the digest changed). Export

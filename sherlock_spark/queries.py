@@ -17,6 +17,7 @@ SQL-expressible (``model_stub.md5_digit_bucket_sql``).
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 from weakref import WeakKeyDictionary
 
@@ -86,17 +87,21 @@ CANON_ALIASES: list[tuple[str, str, str]] = [
 # IMMUTABLE DataFrame plan object, not data: every execution still
 # scans the parquet from disk. Keyed weakly by session so stopped
 # sessions (tests spin up many) drop their entries, and by (dir,
-# table) so multi-scale gate runs never cross streams.
+# table) so multi-scale gate runs never cross streams. Each handle is
+# stamped with the table path's mtime: a table regenerated in place
+# gets a fresh handle instead of a stale file listing.
 _READER_CACHE: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
 def _load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     per_session = _READER_CACHE.setdefault(spark, {})
-    df = per_session.get((sf_dir, table))
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        per_session[(sf_dir, table)] = df
-    return df
+    path = f"{sf_dir}/{table}.parquet"
+    mtime = os.stat(path).st_mtime_ns
+    cached = per_session.get((sf_dir, table))
+    if cached is None or cached[0] != mtime:
+        cached = (mtime, spark.read.parquet(path))
+        per_session[(sf_dir, table)] = cached
+    return cached[1]
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,6 +18,13 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 2048
 
 
+def _default_driver_memory() -> str:
+    """Half of this host's physical RAM, capped at 64g, in Spark's
+    ``<n>m`` form."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(ram // 2, 64 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "sherlock_spark",
     cores: int | None = None,
@@ -64,8 +71,12 @@ def get_spark(
         # heavy extraction stages allocate proportionally to concurrency;
         # an undersized heap turns GC into a serialized resource and
         # *inverts* scaling (measured: 32 tasks 5x slower at 24g than
-        # 64g on a 128 GiB box)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        # 64g on a 128 GiB box). An oversized one gets the JVM killed by
+        # the kernel OOM killer, hence half of physical RAM (cap 64g).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         # Shuffle/spill scratch on tmpfs: in local mode every task shares
         # ONE machine's disk, so a multi-GB shuffle serializes on it —
         # an artifact a real cluster doesn't have (each executor writes

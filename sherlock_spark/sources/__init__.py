@@ -3,7 +3,6 @@
 from sherlock_spark.sources.tacred import read_tacred, tacred_labels, tacred_additional_tokens
 from sherlock_spark.sources.conll import read_conll2003
 from sherlock_spark.sources.transcripts import (
-    read_transcripts,
     synth_transcripts_from_fixtures,
     transcripts_from_documents,
 )
@@ -13,7 +12,6 @@ __all__ = [
     "tacred_labels",
     "tacred_additional_tokens",
     "read_conll2003",
-    "read_transcripts",
     "synth_transcripts_from_fixtures",
     "transcripts_from_documents",
 ]

@@ -166,17 +166,3 @@ def read_conll2003(spark: SparkSession, file_path: str) -> DataFrame:
         _iob1_mentions(F.col("ner")).alias("ments"),
     )
 
-
-def conll_labels(spark: SparkSession, file_path: str) -> list[str]:
-    """NER label set, negative label first (conll_2003.py:182-202)."""
-    df = read_conll2003(spark, file_path)
-    rows = (
-        df.select(F.explode(F.col("tokens.ent_type")).alias("label"))
-        .distinct()
-        .collect()
-    )
-    labels = ["O"]
-    for row in rows:
-        if row.label is not None and row.label != "O":
-            labels.append(row.label)
-    return labels

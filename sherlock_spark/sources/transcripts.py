@@ -128,21 +128,3 @@ def transcripts_from_documents_sql(n_convs: int = 100) -> str:
         FROM documents
     """
 
-
-def read_transcripts(
-    spark: SparkSession, path: str, chunk_turns: int = 256
-) -> DataFrame:
-    """Read a persisted transcript table with stable per-conversation
-    ordering: cluster by (conv_id, turn_idx // chunk_turns) — the
-    SURVEY §4 skew-salted partitioning, so a mega-conversation splits
-    into bounded chunks instead of pinning one task — and sort
-    (conv_id, turn_idx) within partitions, the reference's
-    SequentialSampler determinism analogue (SURVEY.md §4) without a
-    global sort. Ordering is stable per chunk; conversations at or
-    under ``chunk_turns`` turns stay whole in one partition.
-    """
-    from sherlock_spark.plans.pipeline import salt_by_conv
-
-    return salt_by_conv(
-        spark.read.parquet(path), chunk_turns=chunk_turns
-    ).sortWithinPartitions("conv_id", "turn_idx")

@@ -147,7 +147,10 @@ def generate(
         )
         from sherlock_spark.model_stub import DEFAULT_NER_LEXICON
 
-        kept = ", ".join(f"'{w}'" for w in sorted(DEFAULT_NER_LEXICON))
+        # SQL string literals: a quote inside a word is doubled
+        kept = ", ".join(
+            "'" + w.replace("'", "''") + "'" for w in sorted(DEFAULT_NER_LEXICON)
+        )
         mutated = (
             "array_to_string(list_transform(string_split(t.text, ' '), "
             f"w -> CASE WHEN lower(w) IN ({kept}) THEN w "
