@@ -4,8 +4,7 @@
   reference ``sherlock/metrics/f1_score.py:5-26`` (sklearn micro with
   label 0 = ``no_relation`` excluded, wired at
   ``run_binary_relation_clf.py:375``).
-- NER: entity-level exact-match P/R/F1 (seqeval semantics,
-  ``run_ner.py:324-329``) = span-set join after BIO decode.
+- Pair overflow: the ``max_mentions`` cap, counted.
 """
 
 from __future__ import annotations
@@ -42,26 +41,6 @@ def triple_prf(pred: DataFrame, gold: DataFrame) -> dict[str, float]:
         "n_gold": n_gold,
         "n_match": n_match,
     }
-
-
-def span_prf(pred_ments: DataFrame, gold_ments: DataFrame) -> dict[str, float]:
-    """Entity-level seqeval-style P/R/F1: exact (start, end, label) span
-    match per document key (conv_id, turn_idx).
-    """
-    key = ["conv_id", "turn_idx", "start", "end", "label"]
-    n_pred = pred_ments.count()
-    n_gold = gold_ments.count()
-    n_match = pred_ments.select(key).distinct().join(
-        gold_ments.select(key).distinct(), on=key, how="inner"
-    ).count()
-    precision = n_match / n_pred if n_pred else 0.0
-    recall = n_match / n_gold if n_gold else 0.0
-    f1 = (
-        2 * precision * recall / (precision + recall)
-        if precision + recall
-        else 0.0
-    )
-    return {"precision": precision, "recall": recall, "f1": f1}
 
 
 def pair_overflow_stats(
@@ -106,16 +85,3 @@ def pair_overflow_stats(
         ).cast("long").alias("n_pairs_dropped"),
     )
 
-
-def truncation_stats(classified: DataFrame) -> DataFrame:
-    """Share of instances fitting max_seq_length (binary_rc.py:341-355)
-    — a metrics-table row, not a log line.
-    """
-    return classified.agg(
-        F.count("*").alias("n_instances"),
-        F.sum(F.when(F.col("rc.cutoff"), 1).otherwise(0)).alias("n_entity_cutoff"),
-        F.sum(F.when(F.col("rc.truncated"), 1).otherwise(0)).alias("n_truncated"),
-        F.avg(F.when(F.col("rc.truncated"), 0.0).otherwise(1.0)).alias(
-            "fit_fraction"
-        ),
-    )

@@ -19,11 +19,13 @@ marking_fast.py closed forms) and runs JVM-side as column expressions.
 The piece counts come from one per-turn pandas UDF: per word, plus per
 mention label for the strategies that insert ``[HEAD=T]``/``[TAIL=T]``
 masks. The per-pair Arrow transfer carries only four scalar strings.
-One round-robin exchange sits between pair construction and the model
-stage (rebalances quadratic pair skew and keeps one Python stage per
-task pipeline). Every RC model call — here and in the pretrained and
-AllenNLP seams of ``features.py`` — runs through ``rc_model_udf``: one
-iterator pandas UDF body over one per-worker model cache.
+One round-robin exchange, one task per core, sits between pair
+construction and the model stage (rebalances quadratic pair skew and
+keeps one Python stage per task pipeline); on the per-pair path it is
+the extraction's only exchange. Every RC model call — here and in the
+pretrained and AllenNLP seams of ``features.py`` — runs through
+``rc_model_udf``: one iterator pandas UDF body over one per-worker
+model cache.
 """
 
 from __future__ import annotations
@@ -52,6 +54,10 @@ MODEL_RESULT_TYPE = T.StructType(
         T.StructField("model_loads", T.IntegerType()),
     ]
 )
+
+# largest ``max_mentions`` whose pair-index literal is built (see
+# pair_index_array)
+MAX_MENTIONS_CEILING = 32
 
 # worker-side cache: model key -> loaded object (RC model or piece
 # counter). One load per Python worker per key, however many UDF
@@ -96,7 +102,17 @@ def pair_index_array(max_mentions: int):
     ``F.struct``/``F.array`` Column objects costs ~4,000 py4j round
     trips — measured 6-9 s of driver-side plan-construction time PER
     QUERY BUILD, dwarfing the execution win. The SQL parse is one call.
+
+    The table holds (M+1)·M·(M-1)/3 structs: 1,360 at 16, 10,912 at
+    ``MAX_MENTIONS_CEILING`` = 32, 87,360 at 64. A cap above the
+    ceiling raises ``ValueError`` before any literal is built.
     """
+    if max_mentions > MAX_MENTIONS_CEILING:
+        raise ValueError(
+            f"max_mentions={max_mentions} is above the ceiling "
+            f"MAX_MENTIONS_CEILING={MAX_MENTIONS_CEILING}: the pair-index "
+            f"literal grows as max_mentions**3."
+        )
     return F.expr(_pair_index_sql(max_mentions))
 
 
@@ -427,6 +443,10 @@ def extract_triples(
     """
     if entity_handling not in ENTITY_HANDLING_STRATEGIES:
         raise ValueError(f"Unknown entity handling '{entity_handling}'.")
+    # one pair-index literal per call: its slot lookup re-resolves
+    # against the capped ``ments`` below, where the capped count is
+    # the same
+    overflow, capped, idx_pairs = _pair_slots(max_mentions)
     with_masks = max_length is not None and entity_handling != "mark_entity"
 
     # Pair construction in two small steps:
@@ -458,7 +478,6 @@ def extract_triples(
             counts(words, F.col("ments.label")) if with_masks else counts(words),
         )
 
-    overflow, capped, _ = _pair_slots(max_mentions)
     capped_ments = F.slice(F.col("ments"), F.lit(1), capped)
     ment_texts = F.transform(
         capped_ments,
@@ -514,7 +533,6 @@ def extract_triples(
     # and the single biggest first-evaluation JIT hog of the whole
     # query (15.2 s at sf1). An empty slot (m < 2) explodes to no
     # rows. ``ments`` is already capped here.
-    _, _, idx_pairs = _pair_slots(max_mentions)
     exploded = turns.withColumn("pair", F.explode(idx_pairs))
 
     h, t = F.col("pair.h"), F.col("pair.t")
@@ -560,10 +578,13 @@ def extract_triples(
     #     rebalance makes the (expensive, per-pair) model stage
     #     uniformly loaded. With a real transformer the forward
     #     dominates the ~100 B/pair shuffle by orders of magnitude.
-    # 4 tasks per core: the model stage is the long pole, and with
-    # one task per core a single straggler (shared-host noise, skewed
-    # Arrow batch) stalls the stage; finer tasks rebalance.
-    n_parts = spark.sparkContext.defaultParallelism * 4
+    # One task per core, one wave: round-robin rows are already
+    # balanced, and each extra model task pays a Python worker
+    # hand-off of its own. Measured on 4 vCPU (perfbench dense_pairs,
+    # 234k pairs, RC layer alone, noop write), min/median wall of 3:
+    # 16 tasks 4.14/4.31 s, 8 tasks 3.27/3.38 s, 4 tasks 2.80/3.04 s,
+    # 1 task 4.04/4.43 s.
+    n_parts = spark.sparkContext.defaultParallelism
     model = rc_model_udf(
         spark,
         "stub:" + config_hash(list(labels), rule_map),

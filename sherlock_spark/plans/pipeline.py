@@ -120,12 +120,11 @@ def run_kg_pipeline(
             max_mentions=max_mentions,
         )
 
-    triples = manager.run_stage(
-        "triples",
-        build_triples,
-        dedup_keys=["conv_id", "turn_idx", "head_idx", "tail_idx"],
-        repartition_by="conv_id",
-    )
+    # written as the model exchange produces it: (conv_id, turn_idx,
+    # head_idx, tail_idx) is unique by construction (``annotated`` is
+    # deduped on the turn key, the explode emits each (h, t) once), and
+    # no consumer reads a conv_id layout
+    triples = manager.run_stage("triples", build_triples)
 
     def build_pair_overflow() -> DataFrame:
         # counted overflow, not silent truncation (SURVEY §4): the

@@ -77,16 +77,6 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
         )
-        # Shuffle/spill scratch on tmpfs: in local mode every task shares
-        # ONE machine's disk, so a multi-GB shuffle serializes on it —
-        # an artifact a real cluster doesn't have (each executor writes
-        # to its own node-local SSD). tmpfs emulates per-executor disks
-        # for the single-box proxy; override with SPARK_LOCAL_DIR for
-        # datasets larger than RAM.
-        .config(
-            "spark.local.dir",
-            os.environ.get("SPARK_LOCAL_DIR", "/dev/shm/spark-local"),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # One BLAS/OMP thread per task Python: Spark already runs one
@@ -99,6 +89,11 @@ def get_spark(
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
     )
+    # Shuffle/spill scratch: Spark's own default (the JVM temp dir)
+    # unless SPARK_LOCAL_DIR names one. A tmpfs default would hold
+    # spilled data in the RAM the heap needs.
+    if "SPARK_LOCAL_DIR" in os.environ:
+        builder = builder.config("spark.local.dir", os.environ["SPARK_LOCAL_DIR"])
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

@@ -1,7 +1,5 @@
 """Sinks beyond the checkpointed parquet tables (SURVEY.md §2.5).
 
-- K2: predictions JSONL ``{id, label_true, label_pred}``
-  (``run_binary_relation_clf.py:900-916``).
 - K5: brat visualization dicts (``sherlock/microscope/conversion/
   brat.py:57-111`` produces {text, entities:[[id,label,[[s,e]]]...],
   relations:[[id,label,[[role,ent_id]...]]...]}) — derived here from a
@@ -9,20 +7,6 @@
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_predictions_jsonl(
-    pred: DataFrame, path: str, id_col: str = "id",
-    true_col: str = "label_true", pred_col: str = "label_pred",
-) -> None:
-    pred.select(
-        F.col(id_col).alias("id"),
-        F.col(true_col).alias("label_true"),
-        F.col(pred_col).alias("label_pred"),
-    ).write.mode("overwrite").json(path)
 
 
 def to_brat(document_row) -> dict:

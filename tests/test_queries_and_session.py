@@ -23,3 +23,10 @@ def test_default_driver_heap_is_half_of_ram_capped_at_64g():
     heap = _default_driver_memory()
     assert heap.endswith("m")
     assert int(heap[:-1]) == min(ram_mib // 2, 64 << 10)
+
+
+def test_scratch_dir_is_sparks_own_unless_overridden(spark):
+    """No tmpfs default for shuffle and spill scratch: ``spark.local.dir``
+    is set only from SPARK_LOCAL_DIR."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.local.dir") == os.environ.get("SPARK_LOCAL_DIR")
