@@ -2,12 +2,15 @@
 
 Schema: ``(conv_id string, turn_idx int, role string, text string,
 tool string, ts timestamp)`` — BASELINE.json input_hint. Two
-deterministic generators (no external data):
+deterministic generators:
 
 - ``synth_transcripts_from_fixtures`` — fixture sentences from the
   reference TACRED test data replicated across conversations, plus one
   long-tail conversation to exercise skew handling (FIXTURES.md §1).
   Fully distributed: built from ``spark.range`` + column expressions.
+  With ``sentences=None`` (the default) it reads ``FIXTURE_TACRED``, a
+  file of the reference sherlock fixture tree that lies outside this
+  repository; pass ``sentences=`` to run it without that tree.
 - ``transcripts_from_documents`` — derives a transcript table from the
   driver's ``documents`` parquet with pure SQL-expressible arithmetic,
   so every downstream KG stage has an exact DuckDB oracle.

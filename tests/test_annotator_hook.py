@@ -4,11 +4,11 @@
 
 from pyspark.sql import functions as F
 
+from fixture_text import synth_transcripts
 from sherlock_spark.operators.annotator_hook import (
     WhitespaceLexiconAnnotator,
     annotate_with,
 )
-from sherlock_spark.sources.transcripts import synth_transcripts_from_fixtures
 
 
 def test_singleton_and_output_shape(spark):
@@ -19,7 +19,7 @@ def test_singleton_and_output_shape(spark):
     def factory(**options):
         return WhitespaceLexiconAnnotator(lexicon, weight_mb=options["weight_mb"])
 
-    transcripts = synth_transcripts_from_fixtures(spark, n_convs=6, turns_per_conv=4)
+    transcripts = synth_transcripts(spark, n_convs=6, turns_per_conv=4)
     out = annotate_with(
         spark,
         transcripts.repartition(8),  # more tasks than workers

@@ -4,6 +4,7 @@ import os
 
 import pytest
 
+from fixture_text import synth_transcripts
 from sherlock_spark.model_stub import (
     FIXTURE_NER_LEXICON,
     FIXTURE_RC_LABELS,
@@ -17,7 +18,6 @@ from sherlock_spark.operators.canonicalize import (
 from sherlock_spark.operators.linking import link_entities, linked_mentions, make_alias_df
 from sherlock_spark.operators.ner import annotate_mentions
 from sherlock_spark.plans import CheckpointManager, run_kg_pipeline
-from sherlock_spark.sources import synth_transcripts_from_fixtures
 
 ALIASES = [
     ("douglas flint", "Q-DF", "PERSON"),
@@ -31,7 +31,7 @@ ALIASES = [
 
 @pytest.fixture(scope="module")
 def annotated(spark):
-    transcripts = synth_transcripts_from_fixtures(spark, n_convs=3, turns_per_conv=3)
+    transcripts = synth_transcripts(spark, n_convs=3, turns_per_conv=3)
     return annotate_mentions(spark, transcripts, FIXTURE_NER_LEXICON).cache()
 
 
@@ -92,7 +92,7 @@ def test_canonicalize_shared_alias(spark, annotated):
 
 def test_full_dag_and_resume(spark, tmp_path):
     out_dir = str(tmp_path / "kg")
-    transcripts = synth_transcripts_from_fixtures(spark, n_convs=4, turns_per_conv=2)
+    transcripts = synth_transcripts(spark, n_convs=4, turns_per_conv=2)
     result = run_kg_pipeline(
         spark,
         transcripts,
@@ -176,9 +176,7 @@ def test_pipeline_annotates_once_per_cold_run(spark, tmp_path, monkeypatch):
         return real(spark_, transcripts_, lexicon, **kwargs)
 
     monkeypatch.setattr(pipeline_mod, "annotate_mentions", counting_annotate)
-    transcripts = synth_transcripts_from_fixtures(
-        spark, n_convs=2, turns_per_conv=2
-    )
+    transcripts = synth_transcripts(spark, n_convs=2, turns_per_conv=2)
     out_dir = str(tmp_path / "kg")
     result = run_kg_pipeline(
         spark,

@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fixture_text import synth_transcripts
 from sherlock_spark.model_stub import FIXTURE_NER_LEXICON
 from sherlock_spark.operators.features import (
     ner_annotate_from_pretrained,
@@ -19,7 +20,6 @@ from sherlock_spark.operators.features import (
 )
 from sherlock_spark.operators.ner import annotate_mentions
 from sherlock_spark.sources import read_tacred, tacred_labels
-from sherlock_spark.sources.transcripts import synth_transcripts_from_fixtures
 from sherlock_spark.text.bert_like import BertLikeTokenizer
 from sherlock_spark.text.token_clf import (
     PAD_TOKEN_LABEL_ID,
@@ -138,7 +138,7 @@ def test_pretrained_seam_fat_weights(spark, tmp_path):
         weights={"embedding": rng.normal(size=(2048, 512)).astype(np.float32)},
     )  # ~4M params ≈ 16 MB — must travel via SparkFiles, not pickling
 
-    transcripts = synth_transcripts_from_fixtures(spark, n_convs=8, turns_per_conv=4)
+    transcripts = synth_transcripts(spark, n_convs=8, turns_per_conv=4)
     # many more tasks than workers -> the load counter proves reuse
     out = ner_annotate_from_pretrained(
         spark, transcripts.repartition(8), model_dir

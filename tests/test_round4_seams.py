@@ -280,13 +280,11 @@ def test_salt_by_conv_spreads_mega_conversation(spark):
     pins the whole hot conversation on one task."""
     from pyspark.sql import functions as F
 
+    from fixture_text import synth_transcripts
     from sherlock_spark.plans.pipeline import salt_by_conv
-    from sherlock_spark.sources.transcripts import (
-        synth_transcripts_from_fixtures,
-    )
 
     n_parts = 8
-    transcripts = synth_transcripts_from_fixtures(
+    transcripts = synth_transcripts(
         spark, n_convs=20, turns_per_conv=50, skew_conv_turns=20_000
     )
     total = 20 * 50 + 20_000

@@ -4,14 +4,13 @@
 
 import json
 
+from fixture_text import synth_transcripts, transcript_sentences
 from sherlock_spark.sources import (
     read_conll2003,
     read_tacred,
-    synth_transcripts_from_fixtures,
     tacred_additional_tokens,
     tacred_labels,
 )
-from sherlock_spark.sources.transcripts import fixture_sentences
 
 TACRED_FIXTURE = "/root/reference/tests/fixtures/datasets/tacred.json"
 CONLL_FIXTURE = "/root/reference/tests/fixtures/datasets/conll.txt"
@@ -93,13 +92,13 @@ def test_conll_reader(spark):
 
 
 def test_synth_transcripts_deterministic(spark):
-    df1 = synth_transcripts_from_fixtures(spark, n_convs=5, turns_per_conv=4, skew_conv_turns=10)
-    df2 = synth_transcripts_from_fixtures(spark, n_convs=5, turns_per_conv=4, skew_conv_turns=10)
+    df1 = synth_transcripts(spark, n_convs=5, turns_per_conv=4, skew_conv_turns=10)
+    df2 = synth_transcripts(spark, n_convs=5, turns_per_conv=4, skew_conv_turns=10)
     rows1 = sorted(df1.collect(), key=lambda r: (r.conv_id, r.turn_idx))
     rows2 = sorted(df2.collect(), key=lambda r: (r.conv_id, r.turn_idx))
     assert rows1 == rows2
     assert len(rows1) == 5 * 4 + 10
-    sentences = set(fixture_sentences())
+    sentences = set(transcript_sentences())
     assert all(r.text in sentences for r in rows1)
     hot = [r for r in rows1 if r.conv_id == "conv-hot"]
     assert len(hot) == 10

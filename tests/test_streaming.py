@@ -5,12 +5,12 @@ import os
 
 import pytest
 
+from fixture_text import synth_transcripts
 from sherlock_spark.model_stub import (
     FIXTURE_NER_LEXICON,
     FIXTURE_RC_LABELS,
     FIXTURE_RC_RULES,
 )
-from sherlock_spark.sources import synth_transcripts_from_fixtures
 from sherlock_spark.streaming import stream_extract_triples, stream_triple_rates
 
 
@@ -19,7 +19,7 @@ def test_streaming_extraction_incremental(spark, tmp_path):
     output_dir = str(tmp_path / "out")
     checkpoint_dir = str(tmp_path / "ckpt")
 
-    batch1 = synth_transcripts_from_fixtures(spark, n_convs=3, turns_per_conv=2)
+    batch1 = synth_transcripts(spark, n_convs=3, turns_per_conv=2)
     batch1.write.mode("append").parquet(input_dir)
 
     query = stream_extract_triples(
@@ -38,7 +38,7 @@ def test_streaming_extraction_incremental(spark, tmp_path):
     # second wave of files: new conversations; rerun with the same
     # checkpoint — only the new files are processed, no duplicates
     batch2 = (
-        synth_transcripts_from_fixtures(spark, n_convs=3, turns_per_conv=2)
+        synth_transcripts(spark, n_convs=3, turns_per_conv=2)
         .selectExpr(
             "concat('new-', conv_id) as conv_id", "turn_idx", "role",
             "text", "tool", "ts",
@@ -70,7 +70,7 @@ def test_streaming_windowed_rates(spark, tmp_path):
     checkpoint_dir = str(tmp_path / "ckpt2")
     out_dir = str(tmp_path / "rates")
 
-    synth_transcripts_from_fixtures(spark, n_convs=2, turns_per_conv=12).write.mode(
+    synth_transcripts(spark, n_convs=2, turns_per_conv=12).write.mode(
         "append"
     ).parquet(input_dir)
 
