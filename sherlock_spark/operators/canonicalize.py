@@ -12,26 +12,32 @@ chain needs ~11. Iterations are bounded, convergence is *measured*
 (non-convergence raises — an unconverged label table is silently
 wrong), not assumed.
 
-Scale notes: each iteration is one shuffle on the node id; lineage is
-cut with an eager ``localCheckpoint`` EVERY iteration. Anything laxer
-is catastrophic: ``comp_{i+1}`` references ``comp_i`` twice (once in
-the neighbor-min join, once in the update join), so an uncheckpointed
-plan doubles in size per iteration — 3 deferred iterations re-execute
-the base plan 8x and each duplicated join spawns its own
-broadcast-build job (measured: 67 s for a 10-node graph with
-checkpoint-every-3 vs ~4 s with per-iteration checkpoints at
-sf0.1/local[32]). Per-iteration materialization is O(V) rows — the
-same discipline GraphFrames uses. A hub alias ("user" linked
-everywhere) creates a giant star — harmless for min-propagation
-(depth 2); the skew-sensitive part is the *join back*, handled by AQE
-skew join. Demonstrated beyond toy size by
-``tests/test_canonicalize_scale.py`` / ``tools/bench_cc_scale.py``
-(10^6-edge hub graph).
+A graph of at most ``local_threshold`` edges never enters that loop: one
+bounded ``limit(n+1)`` collect reads it as Arrow, a driver union-find
+labels it, and the labels go back to Spark as one Arrow table. That is
+one action where the loop runs several jobs per iteration, and it is
+the path the pipeline's alias graph takes.
+
+Scale notes (the distributed loop): each iteration is one shuffle on
+the node id; lineage is cut with an eager ``localCheckpoint`` EVERY
+iteration. Anything laxer is catastrophic: ``comp_{i+1}`` references
+``comp_i`` twice (once in the neighbor-min join, once in the update
+join), so an uncheckpointed plan doubles in size per iteration — 3
+deferred iterations re-execute the base plan 8x and each duplicated
+join spawns its own broadcast-build job (measured: 67 s for a 10-node
+graph with checkpoint-every-3 vs ~4 s with per-iteration checkpoints at
+sf0.1/local[32]). Per-iteration materialization is O(V) rows — the same
+discipline GraphFrames uses. A hub alias ("user" linked everywhere)
+creates a giant star — harmless for min-propagation (depth 2); the
+skew-sensitive part is the *join back*, handled by AQE skew join.
+Demonstrated beyond toy size by ``tests/test_canonicalize_scale.py`` /
+``tools/bench_cc_scale.py`` (10^6-edge hub graph).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -55,33 +61,32 @@ def connected_components(
     documented bound. A loop that exhausts ``max_iterations`` without
     converging returns WRONG labels, so it raises instead.
 
-    Small-graph fast path (round-6): a graph at or under
-    ``local_threshold`` edges is collected and union-found on the
-    driver — semantics identical (min label per component), but the
-    distributed loop's 5-6 tiny Spark jobs PER ITERATION (two
-    checkpoints, a convergence count, the join builds) are pure
-    fixed overhead there: the 18-node alias graph of the KG pipeline
-    spent ~7 s of a cold run on job latency alone, the local path
-    milliseconds. The size probe is a bounded ``limit(n+1).count()``
-    over the already-checkpointed edge list, so a billion-edge graph
-    pays one short-circuited scan and takes the distributed loop
-    exactly as before; 65536 edges collect to a few MB on the driver,
-    far under any sane ``maxResultSize``. Pass ``local_threshold=0``
-    to force the distributed loop (the scale tests pin its iteration
-    bounds and non-convergence error).
+    Small-graph fast path: the edge list is collected once, as Arrow,
+    with ``limit(local_threshold + 1).toArrow()``. When that returns at
+    most ``local_threshold`` edges, the graph is union-found on the
+    driver (same semantics: min label per component) and the labels go
+    back as an Arrow table; no row is pickled either way. That collect
+    is the path's only action; the distributed loop runs 5-6 tiny jobs
+    PER ITERATION (two checkpoints, a convergence count, the join
+    builds). A larger graph has paid one short-circuited scan of at
+    most ``local_threshold + 1`` rows (a few MB, far under any sane
+    ``maxResultSize``); only then is the edge list checkpointed for the
+    loop. Pass ``local_threshold=0`` to force the distributed loop (the
+    scale tests pin its iteration bounds and non-convergence error).
 
     When a ``stats`` dict is passed, ``stats["iterations"]`` records the
     number of rounds actually run (scale tests pin this against the
     graph diameter; the local path records 0 with ``mode="local"``).
     """
+    edges = edges.select("src", "dst")
+    if local_threshold:
+        bounded = edges.limit(local_threshold + 1).toArrow()
+        if bounded.num_rows <= local_threshold:
+            return _connected_components_local(edges.sparkSession, bounded, stats)
     # materialize the edge list once — its lineage may contain the whole
     # upstream extraction pipeline, which must not be recomputed on
     # every iteration's join
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    if local_threshold:
-        n_edges = edges.limit(local_threshold + 1).count()
-        if n_edges <= local_threshold:
-            return _connected_components_local(edges, stats)
+    edges = edges.localCheckpoint(eager=True)
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -160,7 +165,7 @@ def connected_components(
 
 
 def _connected_components_local(
-    edges: DataFrame, stats: dict | None
+    spark: SparkSession, edges: pa.Table, stats: dict | None
 ) -> DataFrame:
     """Driver-side union-find over a small collected edge list —
     byte-identical output contract to the distributed loop: (node,
@@ -176,11 +181,11 @@ def _connected_components_local(
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.collect():
-        for node in (row[0], row[1]):
+    for src, dst in zip(edges["src"].to_pylist(), edges["dst"].to_pylist()):
+        for node in (src, dst):
             if node not in parent:
                 parent[node] = node
-        ra, rb = find(row[0]), find(row[1])
+        ra, rb = find(src), find(dst)
         if ra != rb:
             parent[ra] = rb
     component_min: dict[str, str] = {}
@@ -189,14 +194,20 @@ def _connected_components_local(
         cur = component_min.get(root)
         if cur is None or node < cur:
             component_min[root] = node
-    rows = [(node, component_min[find(node)]) for node in sorted(parent)]
+    nodes = sorted(parent)
     if stats is not None:
         stats["iterations"] = 0
         stats["converged"] = True
         stats["mode"] = "local"
-    return edges.sparkSession.createDataFrame(
-        rows, "node string, component string"
+    labels = pa.table(
+        {
+            "node": pa.array(nodes, pa.string()),
+            "component": pa.array(
+                [component_min[find(node)] for node in nodes], pa.string()
+            ),
+        }
     )
+    return spark.createDataFrame(labels)
 
 
 def canonicalize(link_table: DataFrame) -> DataFrame:
@@ -208,26 +219,24 @@ def canonicalize(link_table: DataFrame) -> DataFrame:
     ids/aliases) get one canonical id; unlinked surfaces canonicalize to
     themselves.
     """
-    surfaces = link_table.select(
-        F.concat(F.lit("a:"), "ment_label", F.lit(":"), "ment_norm").alias("src"),
-        F.when(
-            F.col("kb_id").isNotNull(), F.concat(F.lit("k:"), "kb_id")
-        ).alias("dst"),
+    surface_id = F.concat(F.lit("a:"), "ment_label", F.lit(":"), "ment_norm")
+    edges = (
+        link_table.filter(F.col("kb_id").isNotNull())
+        .select(surface_id.alias("src"), F.concat(F.lit("k:"), "kb_id").alias("dst"))
+        .distinct()
+    )
+    # only surfaces labelled with another node reach the join: a KB node
+    # never matches a surface, and a surface that is its own component's
+    # min is the coalesce below
+    moved = connected_components(edges).filter(
+        F.col("node").startswith("a:") & (F.col("node") != F.col("component"))
+    )
+    # one row per surface: ``moved`` has at most one row per node
+    surfaces = link_table.select("ment_norm", "ment_label").distinct()
+    return surfaces.join(moved, surface_id == moved.node, "left").select(
         "ment_norm",
         "ment_label",
-    ).distinct()
-
-    edges = surfaces.filter(F.col("dst").isNotNull()).select("src", "dst")
-    components = connected_components(edges)
-
-    return (
-        surfaces.join(components, surfaces.src == components.node, "left")
-        .select(
-            "ment_norm",
-            "ment_label",
-            F.coalesce(F.col("component"), F.col("src")).alias("canonical_id"),
-        )
-        .distinct()
+        F.coalesce(F.col("component"), surface_id).alias("canonical_id"),
     )
 
 
@@ -255,39 +264,32 @@ def resolve_canonical_ids_normed(
     consumed directly by aggregate-before-resolve callers
     (``materialize_graph``) whose input rows are pre-collapsed tuples
     rather than raw triples."""
-    subj_map = canonical_map.select(
-        F.col("ment_norm").alias("subj_norm"),
-        F.col("ment_label").alias("subj_type"),
-        F.col("canonical_id").alias("subj_id"),
-    )
-    obj_map = canonical_map.select(
-        F.col("ment_norm").alias("obj_norm"),
-        F.col("ment_label").alias("obj_type"),
-        F.col("canonical_id").alias("obj_id"),
-    )
     # No broadcast hint: the canonical map is the full distinct surface
     # vocabulary — data-sized, a driver-OOM at 10^12 turns if forced to
     # broadcast. AQE picks broadcast when the map is actually small and
     # falls back to a (skew-handled) shuffle join when it isn't; for
     # co-located repeats, bucket both sides on the norm key upstream.
-    resolved = (
-        normed.join(subj_map, ["subj_norm", "subj_type"], "left")
-        .join(obj_map, ["obj_norm", "obj_type"], "left")
-        .withColumn(
-            "subj_id",
-            F.coalesce(
-                F.col("subj_id"),
-                F.concat(F.lit("a:"), "subj_type", F.lit(":"), "subj_norm"),
-            ),
+    # Both joins read the map under one unrenamed projection, so their
+    # build sides are one plan and a broadcast is built once, then reused.
+    id_map = canonical_map.select("ment_norm", "ment_label", "canonical_id")
+    resolved = normed.alias("t")
+    for side in ("subj", "obj"):
+        norm, kind = F.col(f"t.{side}_norm"), F.col(f"t.{side}_type")
+        resolved = (
+            resolved.join(
+                id_map.alias("m"),
+                (norm == F.col("m.ment_norm")) & (kind == F.col("m.ment_label")),
+                "left",
+            )
+            .select(
+                "t.*",
+                F.coalesce(
+                    F.col("m.canonical_id"),
+                    F.concat(F.lit("a:"), kind, F.lit(":"), norm),
+                ).alias(f"{side}_id"),
+            )
+            .alias("t")
         )
-        .withColumn(
-            "obj_id",
-            F.coalesce(
-                F.col("obj_id"),
-                F.concat(F.lit("a:"), "obj_type", F.lit(":"), "obj_norm"),
-            ),
-        )
-    )
     return resolved
 
 
@@ -326,17 +328,24 @@ def materialize_graph(
         resolved.groupBy("subj_id", "pred", "obj_id")
         .agg(F.sum("n_evidence").alias("n_evidence"))
     )
-    nodes = (
-        resolved.select(
-            F.col("subj_id").alias("canonical_id"),
-            F.col("subj_type").alias("label"),
-            F.col("subj_norm").alias("surface"),
-        )
-        .union(
-            resolved.select(
-                F.col("obj_id"), F.col("obj_type"), F.col("obj_norm")
+    # both endpoints of one resolved row, exploded rather than a union of
+    # two scans: each scan would prune the other side's id from its map
+    # join, and the two pruned build sides would be two broadcasts
+    endpoints = F.explode(
+        F.array(
+            *(
+                F.struct(
+                    F.col(f"{side}_id").alias("canonical_id"),
+                    F.col(f"{side}_type").alias("label"),
+                    F.col(f"{side}_norm").alias("surface"),
+                )
+                for side in ("subj", "obj")
             )
         )
+    )
+    nodes = (
+        resolved.select(endpoints.alias("node"))
+        .select("node.*")
         .groupBy("canonical_id", "label")
         .agg(F.array_sort(F.collect_set("surface")).alias("surface_forms"))
     )

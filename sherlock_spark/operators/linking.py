@@ -22,24 +22,24 @@ join handles hub aliases; an optional salt column caps single-key fanout.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def make_alias_df(spark, aliases: list[tuple[str, str, str]]) -> DataFrame:
-    """aliases: (alias_text, kb_id, ent_type). Normalization = lower."""
-    return spark.createDataFrame(
-        aliases, "alias string, kb_id string, ent_type string"
-    ).withColumn("alias_norm", F.lower(F.col("alias")))
+    """aliases: (alias_text, kb_id, ent_type). Normalization = lower.
+    Handed to Spark as one Arrow table: a large dictionary is not
+    pickled row by row."""
+    columns = [pa.array(c, pa.string()) for c in list(zip(*aliases)) or [(), (), ()]]
+    table = pa.table(columns, names=["alias", "kb_id", "ent_type"])
+    return spark.createDataFrame(table).withColumn("alias_norm", F.lower("alias"))
 
 
-def link_entities(annotated: DataFrame, alias_df: DataFrame) -> DataFrame:
-    """annotated (conv_id, turn_idx, words, ments, ...) -> + ents column.
-
-    ``ents``: array<struct<mentions_indices array<int>, label string,
-    ref_ids map<string,string>>>, reference Entity shape (SURVEY §1.3).
-    """
-    ments = annotated.select(
+def _mentions(annotated: DataFrame) -> DataFrame:
+    """One row per mention: (conv_id, turn_idx, ment_idx, ment_label,
+    ment_norm = lowercased surface, ment_start)."""
+    return annotated.select(
         "conv_id",
         "turn_idx",
         F.posexplode("ments").alias("ment_idx", "ment"),
@@ -61,6 +61,15 @@ def link_entities(annotated: DataFrame, alias_df: DataFrame) -> DataFrame:
         ).alias("ment_norm"),
         F.col("ment.start").alias("ment_start"),
     )
+
+
+def link_entities(annotated: DataFrame, alias_df: DataFrame) -> DataFrame:
+    """annotated (conv_id, turn_idx, words, ments, ...) -> + ents column.
+
+    ``ents``: array<struct<mentions_indices array<int>, label string,
+    ref_ids map<string,string>>>, reference Entity shape (SURVEY §1.3).
+    """
+    ments = _mentions(annotated)
 
     linked = ments.join(
         F.broadcast(alias_df),
@@ -112,27 +121,7 @@ def linked_mentions(annotated: DataFrame, alias_df: DataFrame) -> DataFrame:
     """Flat (conv_id, turn_idx, ment_idx, ment_norm, ment_label, kb_id)
     link table — the input to cross-conversation canonicalization.
     """
-    ments = annotated.select(
-        "conv_id",
-        "turn_idx",
-        F.posexplode("ments").alias("ment_idx", "ment"),
-        F.col("words"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "ment_idx",
-        F.col("ment.label").alias("ment_label"),
-        F.lower(
-            F.concat_ws(
-                " ",
-                F.slice(
-                    "words",
-                    F.col("ment.start") + 1,
-                    F.col("ment.end") - F.col("ment.start"),
-                ),
-            )
-        ).alias("ment_norm"),
-    )
+    ments = _mentions(annotated).drop("ment_start")
     return ments.join(
         F.broadcast(alias_df.select("alias_norm", "ent_type", "kb_id")),
         (ments.ment_norm == F.col("alias_norm"))

@@ -19,17 +19,18 @@ marking_fast.py closed forms) and runs JVM-side as column expressions.
 The piece counts come from one per-turn pandas UDF: per word, plus per
 mention label for the strategies that insert ``[HEAD=T]``/``[TAIL=T]``
 masks. The per-pair Arrow transfer carries only four scalar strings.
-One round-robin exchange, one task per core, sits between pair
-construction and the model stage (rebalances quadratic pair skew and
-keeps one Python stage per task pipeline); on the per-pair path it is
-the extraction's only exchange. Every RC model call — here and in the
-pretrained and AllenNLP seams of ``features.py`` — runs through
-``rc_model_udf``: one iterator pandas UDF body over one per-worker
-model cache.
+One round-robin exchange over turns, one task per core, sits between
+the per-turn work and pair construction + the model stage (spreads the
+turns and keeps one Python stage per task pipeline); on the per-pair
+path it is the extraction's only exchange. Every RC model call — here
+and in the pretrained and AllenNLP seams of ``features.py`` — runs
+through ``rc_model_udf``: one iterator pandas UDF body over one
+per-worker model cache.
 """
 
 from __future__ import annotations
 
+import json
 from functools import lru_cache, partial
 from typing import Callable, Iterator, Optional, Tuple
 
@@ -97,11 +98,13 @@ def pair_index_array(max_mentions: int):
     folds into ONE Literal and the per-row work collapses to an O(1)
     ``element_at``.
 
-    Built as ONE SQL string handed to ``F.expr`` (cached per
-    ``max_mentions``): composing it from ~4,000 nested ``F.lit``/
-    ``F.struct``/``F.array`` Column objects costs ~4,000 py4j round
-    trips — measured 6-9 s of driver-side plan-construction time PER
-    QUERY BUILD, dwarfing the execution win. The SQL parse is one call.
+    Handed over as ONE JSON string under ``from_json``, which the
+    optimizer folds to that Literal: two expression nodes to analyze.
+    Nested ``F.lit``/``F.struct``/``F.array`` Columns cost ~4,000 py4j
+    round trips (6-9 s per query build), and the same table as SQL text
+    is ~7,000 nodes that every analysis walks until folded (0.2 s per
+    ``extract_triples`` build warm, 0.9 s cold). ``from_json`` reads
+    the fields back nullable: ``head_idx``/``tail_idx`` are nullable.
 
     The table holds (M+1)·M·(M-1)/3 structs: 1,360 at 16, 10,912 at
     ``MAX_MENTIONS_CEILING`` = 32, 87,360 at 64. A cap above the
@@ -113,25 +116,18 @@ def pair_index_array(max_mentions: int):
             f"MAX_MENTIONS_CEILING={MAX_MENTIONS_CEILING}: the pair-index "
             f"literal grows as max_mentions**3."
         )
-    return F.expr(_pair_index_sql(max_mentions))
+    return F.from_json(
+        F.lit(_pair_index_json(max_mentions)), "array<array<struct<h:int,t:int>>>"
+    )
 
 
 @lru_cache(maxsize=None)
-def _pair_index_sql(max_mentions: int) -> str:
-    tables = []
-    for m in range(max_mentions + 1):
-        pairs = [
-            f"named_struct('h',{h},'t',{t})"
-            for h in range(m)
-            for t in range(m)
-            if h != t
-        ]
-        tables.append(
-            f"array({','.join(pairs)})"
-            if pairs
-            else "cast(array() as array<struct<h:int,t:int>>)"
-        )
-    return f"array({','.join(tables)})"
+def _pair_index_json(max_mentions: int) -> str:
+    tables = [
+        [{"h": h, "t": t} for h in range(m) for t in range(m) if h != t]
+        for m in range(max_mentions + 1)
+    ]
+    return json.dumps(tables, separators=(",", ":"))
 
 
 def _pair_slots(max_mentions: int) -> tuple[Column, Column, Column]:
@@ -527,6 +523,22 @@ def extract_triples(
         # stage registry).
         turns = turns.localCheckpoint(eager=True)
 
+    # The per-pair path's one exchange: round-robin over TURNS, between
+    # the per-turn piece-count UDF and pair construction + the model.
+    # It keeps one Python stage per task (NER UDF -> explode -> RC UDF in
+    # one task runs 2 Python workers in lockstep: 80 s vs 38 s at
+    # sf0.1/local[32]); equal turns per task even out the quadratic pair
+    # counts (at most max_mentions*(max_mentions-1) per turn); and 1,500
+    # turn rows cross it on perfbench dense_pairs instead of 234k pairs
+    # (warm triples stage ~2.5 -> ~2.1 s on 4 vCPU). One task per core,
+    # one wave: each extra model task pays its own Python worker hand-off
+    # (RC layer alone, 234k pairs, 4 vCPU, min/median of 3: 16 tasks
+    # 4.14/4.31 s, 8 tasks 3.27/3.38 s, 4 tasks 2.80/3.04 s, 1 task
+    # 4.04/4.43 s).
+    n_parts = spark.sparkContext.defaultParallelism
+    if not dedup_model_inputs:
+        turns = turns.repartition(n_parts)
+
     # O(1) lookup into the constant-folded pair-index literal (see
     # pair_index_array): the old per-row transform/filter/flatten
     # construction was CodegenFallback — interpreted on every row
@@ -567,24 +579,6 @@ def extract_triples(
         truncated.alias("truncated"),
     ).filter(~F.col("cutoff"))
 
-    # Exchange between pair construction and model inference.
-    # Two reasons, both measured:
-    # (1) chaining two ArrowEvalPython nodes in one task pipeline
-    #     (NER UDF -> explode -> RC UDF) runs 2 Python workers per
-    #     task with lockstep backpressure — 80 s vs 38 s at
-    #     sf0.1/local[32] for the identical plan split in two;
-    # (2) pair counts are quadratic in per-turn mention count, so
-    #     turn-partitioned pair rows are skewed; a round-robin
-    #     rebalance makes the (expensive, per-pair) model stage
-    #     uniformly loaded. With a real transformer the forward
-    #     dominates the ~100 B/pair shuffle by orders of magnitude.
-    # One task per core, one wave: round-robin rows are already
-    # balanced, and each extra model task pays a Python worker
-    # hand-off of its own. Measured on 4 vCPU (perfbench dense_pairs,
-    # 234k pairs, RC layer alone, noop write), min/median wall of 3:
-    # 16 tasks 4.14/4.31 s, 8 tasks 3.27/3.38 s, 4 tasks 2.80/3.04 s,
-    # 1 task 4.04/4.43 s.
-    n_parts = spark.sparkContext.defaultParallelism
     model = rc_model_udf(
         spark,
         "stub:" + config_hash(list(labels), rule_map),
@@ -626,7 +620,6 @@ def extract_triples(
             *[F.col(f"p.{c}") for c in pairs.columns], F.col("d.rc")
         )
     else:
-        pairs = pairs.repartition(n_parts)
         classified = pairs.withColumn("rc", model(*[F.col(k) for k in MODEL_KEYS]))
     result = classified.filter(F.col("rc.label").isNotNull())
     if ignore_no_relation:

@@ -23,7 +23,8 @@ observes ``n_rows`` itself (``DataFrame.observe``), rows per write task
 come from the written files' metadata (parquet footers, or Iceberg's
 ``files`` metadata table, which also gives a merged table's row count),
 and the recorded schema lets ``read_stage`` skip schema inference.
-Every write job carries the job description ``stage <name>``.
+Every job a stage runs, in its build (a collect a builder needs) or in
+its write, carries the job description ``stage <name>``.
 """
 
 from __future__ import annotations
@@ -136,7 +137,6 @@ class CheckpointManager:
         stage: str,
         build: Callable[[], DataFrame],
         dedup_keys: Optional[list[str]] = None,
-        repartition_by: Optional[str] = None,
     ) -> DataFrame:
         """Run ``build`` unless the stage already completed; materialize
         it with lineage. Killed mid-write -> no lineage file -> rerun
@@ -146,12 +146,10 @@ class CheckpointManager:
             return self.read_stage(stage)
 
         started = time.time()
-        df = build()
-        if dedup_keys:
-            df = df.dropDuplicates(dedup_keys)
-        if repartition_by:
-            df = df.repartition(F.col(repartition_by))
         with _job_description(self.spark, f"stage {stage}"):
+            df = build()
+            if dedup_keys:
+                df = df.dropDuplicates(dedup_keys)
             written = self._write(stage, df, dedup_keys)
         if written is not None:
             self._write_lineage(stage, df.schema, *written, dedup_keys, started)

@@ -16,8 +16,9 @@ conversation is safe — only ordering-sensitive consumers re-sort by
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, Optional
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +28,7 @@ from sherlock_spark.model_stub import (
 )
 from sherlock_spark.operators.canonicalize import canonicalize, materialize_graph
 from sherlock_spark.operators.linking import linked_mentions, make_alias_df
+from sherlock_spark.operators.metrics import pair_overflow_stats
 from sherlock_spark.operators.ner import annotate_mentions
 from sherlock_spark.operators.rc import extract_triples
 from sherlock_spark.plans.checkpoint import CheckpointManager
@@ -102,11 +104,9 @@ def run_kg_pipeline(
             "conv_id", "turn_idx", "words", "ments"
         )
 
+    # no conv_id repartition after the dedup: no reader needs that layout
     annotated = manager.run_stage(
-        "annotated",
-        build_annotated,
-        dedup_keys=["conv_id", "turn_idx"],
-        repartition_by="conv_id",
+        "annotated", build_annotated, dedup_keys=["conv_id", "turn_idx"]
     )
 
     def build_triples() -> DataFrame:
@@ -120,54 +120,43 @@ def run_kg_pipeline(
             max_mentions=max_mentions,
         )
 
-    # written as the model exchange produces it: (conv_id, turn_idx,
-    # head_idx, tail_idx) is unique by construction (``annotated`` is
-    # deduped on the turn key, the explode emits each (h, t) once), and
-    # no consumer reads a conv_id layout
-    triples = manager.run_stage("triples", build_triples)
-
-    def build_pair_overflow() -> DataFrame:
-        # counted overflow, not silent truncation (SURVEY §4): the
-        # max_mentions cap in enumerate_pairs is accounted for in a
-        # metrics-table row the lineage output carries
-        from sherlock_spark.operators.metrics import pair_overflow_stats
-
-        return pair_overflow_stats(annotated, max_mentions)
-
-    pair_overflow = manager.run_stage(
-        "pair_overflow_metrics", build_pair_overflow
-    )
-
     alias_rows = aliases if aliases is not None else default_aliases(lexicon)
-    alias_df = make_alias_df(spark, alias_rows)
 
-    def build_links() -> DataFrame:
-        return linked_mentions(annotated, alias_df)
+    def links_and_map() -> tuple[DataFrame, DataFrame]:
+        links = manager.run_stage(
+            "links",
+            lambda: linked_mentions(annotated, make_alias_df(spark, alias_rows)),
+        )
+        return links, manager.run_stage("canonical_map", lambda: canonicalize(links))
 
-    links = manager.run_stage(
-        "links",
-        build_links,
-        dedup_keys=["conv_id", "turn_idx", "ment_idx"],
-        repartition_by="conv_id",
+    # Every stage after ``annotated`` is written as built, with no dedup
+    # shuffle, because each table is unique on its key by construction:
+    # - triples on (conv_id, turn_idx, head_idx, tail_idx): ``annotated``
+    #   has one row per turn and the explode emits each (h, t) once;
+    # - links on (conv_id, turn_idx, ment_idx, kb_id) for unique alias
+    #   rows: the explode emits each ment_idx once, and the alias join adds
+    #   one row per matching alias row, keeping every KB id of a multi-KB
+    #   alias as ``SQL_KG_LINKS`` does;
+    # - canonical_map on (ment_norm, ment_label): ``canonicalize`` joins
+    #   the distinct surfaces to at most one component row each;
+    # - nodes and edges: each is a groupBy on exactly its key.
+    # No consumer reads a conv_id layout. Stages that do not read each
+    # other run side by side: their jobs are mostly fixed latency
+    # (planning, scheduling, the write commit) that would otherwise queue.
+    triples, pair_overflow, (links, canonical_map) = run_concurrently(
+        lambda: manager.run_stage("triples", build_triples),
+        # counted overflow, not silent truncation (SURVEY §4): the
+        # max_mentions cap of the pair explode lands in a metrics table
+        lambda: manager.run_stage(
+            "pair_overflow_metrics",
+            lambda: pair_overflow_stats(annotated, max_mentions),
+        ),
+        links_and_map,
     )
-
-    canonical_map = manager.run_stage(
-        "canonical_map",
-        lambda: canonicalize(links),
-        dedup_keys=["ment_norm", "ment_label"],
-    )
-
-    def build_nodes() -> DataFrame:
-        nodes, _ = materialize_graph(triples, canonical_map)
-        return nodes
-
-    def build_edges() -> DataFrame:
-        _, edges = materialize_graph(triples, canonical_map)
-        return edges
-
-    nodes = manager.run_stage("nodes", build_nodes, dedup_keys=["canonical_id", "label"])
-    edges = manager.run_stage(
-        "edges", build_edges, dedup_keys=["subj_id", "pred", "obj_id"]
+    graph = materialize_graph(triples, canonical_map)  # one plan, no job
+    nodes, edges = run_concurrently(
+        lambda: manager.run_stage("nodes", lambda: graph[0]),
+        lambda: manager.run_stage("edges", lambda: graph[1]),
     )
 
     return {
@@ -180,6 +169,29 @@ def run_kg_pipeline(
         "pair_overflow_metrics": pair_overflow,
         "lineage": manager.all_lineage(),
     }
+
+
+def run_concurrently(*thunks: Callable[[], object]) -> list:
+    """Call each thunk, the first on this thread and the rest on threads
+    that inherit this thread's Spark job group and properties; return the
+    results in order. The first failure is raised once all have returned."""
+    results, errors = [None] * len(thunks), []
+
+    def call(index: int) -> None:
+        try:
+            results[index] = thunks[index]()
+        except BaseException as exc:  # re-raised on the calling thread
+            errors.append(exc)
+
+    threads = [InheritableThread(call, args=(i,)) for i in range(1, len(thunks))]
+    for thread in threads:
+        thread.start()
+    call(0)
+    for thread in threads:
+        thread.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 def default_aliases(lexicon: dict[str, str]) -> list[tuple[str, str, str]]:

@@ -257,9 +257,8 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, so the per-pair Python stage (Arrow transfer + forward)
     collapses to a partial-aggregated distinct + broadcast probe.
     Results are pinned identical to the per-pair path by the shared
-    oracle (``kg_triples_dedup_inputs`` has gated the same SQL at every
-    sf since round 4; interleaved sf1 A/B: ~3.5-4.5 s vs ~5-6.7 s
-    warm). The knob stays off by default in ``extract_triples`` —
+    oracle (``kg_triples_dedup_inputs`` runs the per-pair path against
+    the same SQL; interleaved sf1 A/B: ~3.5-4.5 s vs ~5-6.7 s warm). The knob stays off by default in ``extract_triples`` —
     on a high-cardinality corpus the distinct buys nothing — but agent
     transcripts are exactly the heavy-repetition case it exists for."""
     triples = extract_triples(
@@ -313,12 +312,11 @@ SQL_KG_TRIPLES = f"""
 
 
 def q_kg_triples_dedup_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kg_triples with the inference-cache knob on: the model forward
-    runs over DISTINCT (subj_type, obj_type, subj_text, obj_text) keys
-    only and predictions join back null-safely (``rc.py
-    extract_triples(dedup_model_inputs=True)``). Must hash-match the
-    per-pair path's oracle exactly — the knob changes forward cost, not
-    results."""
+    """kg_triples with the inference-cache knob off: the model forward
+    runs once per pair (``extract_triples(dedup_model_inputs=False)``).
+    kg_triples runs the distinct-key path, and both gate against the one
+    oracle ``SQL_KG_TRIPLES``, so the pair pins the knob as changing
+    forward cost, not results. The id names the knob the pair checks."""
     triples = extract_triples(
         spark,
         _annotated(spark, sf_dir),
@@ -327,7 +325,7 @@ def q_kg_triples_dedup_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
         entity_handling="mark_entity",
         max_length=None,
         max_mentions=MAX_MENTIONS,
-        dedup_model_inputs=True,
+        dedup_model_inputs=False,
     )
     return triples.select(
         "conv_id",

@@ -6,6 +6,7 @@ import pytest
 
 from fixture_text import synth_transcripts
 from sherlock_spark.model_stub import (
+    DEFAULT_NER_LEXICON,
     FIXTURE_NER_LEXICON,
     FIXTURE_RC_LABELS,
     FIXTURE_RC_RULES,
@@ -202,3 +203,33 @@ def test_pipeline_annotates_once_per_cold_run(spark, tmp_path, monkeypatch):
         aliases=ALIASES,
     )
     assert len(calls) == 0
+
+
+@pytest.mark.parametrize("join_order", [["Q-J2", "Q-J1"], ["Q-J1", "Q-J2"]])
+def test_pipeline_keeps_every_kb_id_of_a_multi_kb_alias(spark, tmp_path, join_order):
+    """An alias with two KB ids links its mention to both, in either
+    alias-row order: the pipeline's links equal ``linked_mentions`` and
+    its canonical map merges ``merge`` (Q-J2 only) with ``join``."""
+    aliases = [("join", kb, "OPERATOR") for kb in join_order]
+    aliases.append(("merge", "Q-J2", "OPERATOR"))
+    transcripts = spark.createDataFrame(
+        [("c0", 0, "spark will join the table"), ("c1", 0, "merge the stream batch")],
+        "conv_id string, turn_idx int, text string",
+    )
+    result = run_kg_pipeline(
+        spark,
+        transcripts,
+        str(tmp_path / "kg"),
+        ner_lexicon=DEFAULT_NER_LEXICON,
+        aliases=aliases,
+    )
+    expected_links = linked_mentions(result["annotated"], make_alias_df(spark, aliases))
+    links = result["links"].select(*expected_links.columns)
+    assert sorted(links.collect()) == sorted(expected_links.collect())
+    assert links.count() == 7
+
+    expected_map = canonicalize(expected_links)
+    canonical_map = result["canonical_map"].select(*expected_map.columns)
+    assert sorted(canonical_map.collect()) == sorted(expected_map.collect())
+    mapping = {r.ment_norm: r.canonical_id for r in canonical_map.collect()}
+    assert mapping["merge"] == mapping["join"] == "a:OPERATOR:join"

@@ -48,14 +48,13 @@ def test_run_stage_runs_no_job_beyond_the_write(spark, tmp_path):
         spark,
         lambda: _frame(spark)
         .dropDuplicates(["k", "v"])
-        .repartition(F.col("g"))
         .write.parquet(str(tmp_path / "bare")),
     )
     manager = CheckpointManager(spark, str(tmp_path / "ckpt"))
     stage_jobs = _jobs(
         spark,
         lambda: manager.run_stage(
-            "s", lambda: _frame(spark), dedup_keys=["k", "v"], repartition_by="g"
+            "s", lambda: _frame(spark), dedup_keys=["k", "v"]
         ),
     )
     assert len(bare_jobs) > 0

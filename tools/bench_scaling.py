@@ -295,7 +295,7 @@ def render_bench_md(args, results: dict, probe: dict) -> str:
 
 Flagship job: full triple extraction (partitioned transcript-table scan
 -> fused tokenize+NER+span-decode (one iterator pandas UDF) -> per-turn
-mention texts -> index-pair explode -> round-robin exchange -> RC model
+mention texts -> round-robin turn exchange -> index-pair explode -> RC model
 forward (pandas UDF) -> argmax -> no_relation filter -> count). The
 input is a 128-file parquet transcript table materialized (unmeasured)
 from `{args.sf_dir}/documents.parquet` replicated x{args.replicate}

@@ -148,19 +148,19 @@ def main() -> int:
         plan,
     )
 
-    # 6. inference-cache path: the dedup variant's plan must hash-
-    #    partition on the four model keys (serving both the distinct
-    #    and the model-stage spread) and keep the null-safe join —
-    #    never a second round-robin exchange on top
+    # 6. per-pair path (the kg_triples_dedup_inputs gate runs with the
+    #    inference cache off, against kg_triples' oracle): the model is
+    #    fed through the one round-robin exchange, with no distinct-key
+    #    hash exchange — check 3 pins the cached shape on kg_triples
     from sherlock_spark.queries import q_kg_triples_dedup_inputs
 
     plan = plan_of(q_kg_triples_dedup_inputs(spark, sf_dir))
     check(
-        "kg_triples_dedup_inputs: hash exchange on the model keys",
-        re.search(
-            r"hashpartitioning\([^\n]*subj_type[^\n]*obj_type", plan
-        )
-        is not None,
+        "kg_triples_dedup_inputs: per-pair model exchange, no hash "
+        "exchange on the model keys",
+        "RoundRobinPartitioning" in plan
+        and re.search(r"hashpartitioning\([^\n]*subj_type[^\n]*obj_type", plan)
+        is None,
         plan,
     )
     check(
