@@ -31,12 +31,15 @@ from __future__ import annotations
 
 import hashlib
 import json
+from functools import partial
 from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sherlock_spark.executor import executor_model
 
 TOKEN_FIELDS = T.StructType(
     [
@@ -57,9 +60,6 @@ SPAN_FIELDS = T.StructType(
         T.StructField("label", T.StringType()),
     ]
 )
-
-_ANNOTATOR_CACHE: dict[str, object] = {}
-ANNOTATOR_LOADS = {"count": 0}
 
 
 class WhitespaceLexiconAnnotator:
@@ -91,17 +91,6 @@ class WhitespaceLexiconAnnotator:
                 "sents": [(0, len(words), None)],
                 "ments": ments,
             }
-
-
-def _get_annotator(key: str, factory: Callable, options: dict):
-    """Per-worker singleton, keyed by (factory identity, options) — the
-    reference model cache (``spacy.py:17,24-55``)."""
-    annotator = _ANNOTATOR_CACHE.get(key)
-    if annotator is None:
-        annotator = factory(**options)
-        ANNOTATOR_LOADS["count"] += 1
-        _ANNOTATOR_CACHE[key] = annotator
-    return annotator
 
 
 def annotate_with(
@@ -153,12 +142,9 @@ def annotate_with(
 
 def _make_process(cache_key, factory, options, text_col, with_load_counter):
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # resolve the cache through the worker's module — a direct
-        # global reference would be a stale by-value cloudpickle copy
-        from sherlock_spark.operators import annotator_hook as hook
-
-        annotator = hook._get_annotator(cache_key, factory, options)
-        loads = hook.ANNOTATOR_LOADS["count"]
+        # per-worker singleton, keyed by (factory identity, options) — the
+        # reference model cache (``spacy.py:17,24-55``)
+        annotator, loads = executor_model(cache_key, partial(factory, **options))
         for pdf in batches:
             annotations = list(annotator.pipe(pdf[text_col].tolist()))
             pdf = pdf.copy()

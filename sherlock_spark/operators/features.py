@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sherlock_spark.executor import executor_model
 from sherlock_spark.model_stub import StubNerModel
 from sherlock_spark.operators.rc import MODEL_KEYS, rc_model_udf
 from sherlock_spark.text.bert_like import BertLikeTokenizer
@@ -61,15 +62,6 @@ NER_FEATURES_TYPE = T.StructType(
         T.StructField("truncated", T.BooleanType()),
     ]
 )
-
-_CONVERTER_CACHE: dict[str, TokenClassificationConverter] = {}
-# NER bundles (RC bundles load through rc.executor_model)
-_BUNDLE_CACHE: dict[str, tuple] = {}
-# per-worker, per-bundle load counters, observable from tests (returned
-# as a column). Keyed by bundle name: a long-lived Python worker serves
-# many stages, so a global count would read N after N distinct bundles
-# even though each loaded exactly once.
-BUNDLE_LOADS: dict[str, int] = {}
 
 
 def ner_features_udf(
@@ -92,22 +84,18 @@ def ner_features_udf(
         broadcast = spark.sparkContext.broadcast(config)
 
         def _converter() -> TokenClassificationConverter:
-            converter = _CONVERTER_CACHE.get(cache_key)
-            if converter is None:
-                conf = broadcast.value
-                tokenizer = BertLikeTokenizer(do_lower_case=True)
-                tokenizer.add_tokens(conf["additional_tokens"])
-                converter = TokenClassificationConverter(
-                    tokenizer, conf["labels"], max_length=conf["max_length"]
-                )
-                _CONVERTER_CACHE[cache_key] = converter
-            return converter
+            conf = broadcast.value
+            tokenizer = BertLikeTokenizer(do_lower_case=True)
+            tokenizer.add_tokens(conf["additional_tokens"])
+            return TokenClassificationConverter(
+                tokenizer, conf["labels"], max_length=conf["max_length"]
+            )
 
         @F.pandas_udf(NER_FEATURES_TYPE)
         def convert(
             batches: Iterator[tuple[pd.Series, pd.Series]]
         ) -> Iterator[pd.DataFrame]:
-            converter = _converter()
+            converter, _ = executor_model(cache_key, _converter)
             for words_s, bio_s in batches:
                 rows = [
                     converter.words_to_features(
@@ -292,33 +280,26 @@ def _build_ner_model(local_dir: str):
 
 
 def _load_bundle(bundle_name: str):
-    """Executor-side one-time load: resolve via SparkFiles, read K4
-    files + lexicon + weights. Backend selection (real HF model vs
-    stub) happens in ``_build_ner_model`` — a real checkpoint in the
-    bundle dir activates torch with zero code change."""
-    cached = _BUNDLE_CACHE.get(bundle_name)
-    if cached is None:
-        local_dir = SparkFiles.get(bundle_name)
-        if not os.path.isdir(local_dir):
-            # driver-local execution (local mode): the path is the original
-            raise FileNotFoundError(local_dir)
-        tokenizer = BertLikeTokenizer(do_lower_case=True)
-        converter = TokenClassificationConverter.from_pretrained(
-            local_dir, tokenizer
-        )
-        # stub bundles carry weights.npz; real HF checkpoints keep their
-        # parameters in safetensors/bin and load them inside the backend
-        n_params = 0
-        weights_path = os.path.join(local_dir, "weights.npz")
-        if os.path.exists(weights_path):
-            weights = np.load(weights_path)
-            # force the mmap'd arrays resident so load cost is paid once
-            n_params = int(sum(weights[key].size for key in weights.files))
-        model = _build_ner_model(local_dir)
-        BUNDLE_LOADS[bundle_name] = BUNDLE_LOADS.get(bundle_name, 0) + 1
-        cached = (model, converter, n_params)
-        _BUNDLE_CACHE[bundle_name] = cached
-    return cached
+    """Executor-side load (once per worker, through ``executor_model``):
+    resolve via SparkFiles, read K4 files + lexicon + weights. Backend
+    selection (real HF model vs stub) happens in ``_build_ner_model`` —
+    a real checkpoint in the bundle dir activates torch with zero code
+    change."""
+    local_dir = SparkFiles.get(bundle_name)
+    if not os.path.isdir(local_dir):
+        # driver-local execution (local mode): the path is the original
+        raise FileNotFoundError(local_dir)
+    tokenizer = BertLikeTokenizer(do_lower_case=True)
+    converter = TokenClassificationConverter.from_pretrained(local_dir, tokenizer)
+    # stub bundles carry weights.npz; real HF checkpoints keep their
+    # parameters in safetensors/bin and load them inside the backend
+    n_params = 0
+    weights_path = os.path.join(local_dir, "weights.npz")
+    if os.path.exists(weights_path):
+        weights = np.load(weights_path)
+        # force the mmap'd arrays resident so load cost is paid once
+        n_params = int(sum(weights[key].size for key in weights.files))
+    return _build_ner_model(local_dir), converter, n_params
 
 
 def ner_annotate_from_pretrained(
@@ -327,7 +308,7 @@ def ner_annotate_from_pretrained(
     """NER stage loading its model from a pretrained directory
     (SparkFiles-distributed, per-worker singleton). Output matches
     ``annotate_mentions``: words + ments, plus ``model_loads`` (the
-    worker's cumulative bundle-load count — 1 after warmup regardless of
+    worker's load count for the bundle — 1 after warmup regardless of
     task count, pinned by tests)."""
     bundle_name = distribute_pretrained(spark, model_dir)
 
@@ -351,14 +332,10 @@ def ner_annotate_from_pretrained(
 
     @F.pandas_udf(result_type)
     def annotate(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # resolve through the module at runtime: cloudpickle captures
-        # module-level dict globals BY VALUE into the shipped closure,
-        # so a direct BUNDLE_LOADS reference would read a stale copy
-        # while _load_bundle (pickled by reference) mutates the real one
-        from sherlock_spark.operators import features as _feats
-
-        model, _converter, _n_params = _feats._load_bundle(bundle_name)
-        loads = _feats.BUNDLE_LOADS.get(bundle_name, 0)
+        bundle, loads = executor_model(
+            f"ner-bundle:{bundle_name}", partial(_load_bundle, bundle_name)
+        )
+        model = bundle[0]
         for series in batches:
             token_lists = [list(words) for words in series]
             tag_lists = model.predict_tags(token_lists)
@@ -474,8 +451,8 @@ def rc_classify_from_pretrained(
     -> per-worker singleton). ``pairs`` must carry (subj_type, obj_type,
     subj_text, obj_text); adds ``pred`` (argmax label,
     ``transformers_binary_rc.py:42-46``) and ``model_loads`` (the
-    worker's cumulative bundle-load count — 1 after warmup regardless
-    of task count, pinned by tests). The forward is ``rc_model_udf``.
+    worker's load count for the bundle — 1 after warmup regardless of
+    task count, pinned by tests). The forward is ``rc_model_udf``.
     """
     bundle_name = distribute_pretrained(spark, model_dir)
     forward = rc_model_udf(

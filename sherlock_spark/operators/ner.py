@@ -31,11 +31,10 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import types as T
 
+from sherlock_spark.executor import executor_model
 from sherlock_spark.model_stub import StubNerModel
 from sherlock_spark.text.spans import bio_tags_to_spans, spans_to_exclusive_sorted
 from sherlock_spark.udfcache import config_hash, memoized_udf
-
-_MODEL_CACHE: dict[str, StubNerModel] = {}
 
 # explicit DataType (not DDL string): keeps UDF construction independent
 # of an active SparkSession at import time
@@ -58,20 +57,6 @@ TOKENS_TYPE = T.ArrayType(
         ]
     )
 )
-
-
-def _executor_model(cache_key: str, broadcast) -> StubNerModel:
-    """Lazy per-worker singleton; survives tasks because
-    ``spark.python.worker.reuse`` is on (session.py). The key is the
-    *content hash* of the lexicon captured driver-side, so the same
-    configuration maps to one model per worker no matter how many UDF
-    instances or sessions reference it.
-    """
-    model = _MODEL_CACHE.get(cache_key)
-    if model is None:
-        model = StubNerModel(broadcast.value)
-        _MODEL_CACHE[cache_key] = model
-    return model
 
 
 def words_column(text: Column = None) -> Column:
@@ -136,7 +121,9 @@ def ner_tags_udf(spark: SparkSession, lexicon: dict[str, str] | None = None):
 
         @F.pandas_udf(T.ArrayType(T.StringType()))
         def tag(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            model = _executor_model(cache_key, broadcast)
+            model, _ = executor_model(
+                cache_key, lambda: StubNerModel(broadcast.value)
+            )
             for series in batches:
                 token_lists = [list(words) for words in series]
                 yield pd.Series(model.predict_tags(token_lists))
@@ -191,7 +178,9 @@ def ner_ments_udf(spark: SparkSession, lexicon: dict[str, str] | None = None):
 
         @F.pandas_udf(MENTS_TYPE)
         def ments(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            model = _executor_model(cache_key, broadcast)
+            model, _ = executor_model(
+                cache_key, lambda: StubNerModel(broadcast.value)
+            )
             for series in batches:
                 token_lists = [
                     [] if text is None else text.split(" ") for text in series

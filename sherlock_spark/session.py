@@ -65,7 +65,9 @@ def get_spark(
         )
         # Reuse Python workers so per-executor model singletons survive
         # across tasks (the stand-in for sherlock's one-time model load,
-        # reference: sherlock/annotators/spacy.py:17,24-55).
+        # reference: sherlock/annotators/spacy.py:17,24-55), and so does
+        # the zip-import guard that spares each later task's archive
+        # re-reads (executor.py).
         .config("spark.python.worker.reuse", "true")
         # local mode: the driver JVM is the whole engine. The explode-
         # heavy extraction stages allocate proportionally to concurrency;

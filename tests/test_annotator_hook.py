@@ -47,6 +47,21 @@ def test_singleton_and_output_shape(spark):
     assert n_pairs >= 0
 
 
+def test_load_count_is_per_annotator(spark):
+    """Each annotator reports its own loads, not every load the worker
+    made: two lexicons on the same workers read 1 each."""
+    transcripts = synth_transcripts(spark, n_convs=4, turns_per_conv=2)
+    for lexicon in ({"paris": "CITY"}, {"chairman": "TITLE"}):
+        out = annotate_with(
+            spark,
+            transcripts.repartition(4),
+            WhitespaceLexiconAnnotator,
+            {"lexicon": lexicon},
+            with_load_counter=True,
+        )
+        assert {r.annotator_loads for r in out.collect()} == {1}
+
+
 def test_backfill_entity_types(spark):
     """O14 (utils.py:114-125): first non-O token tag inside each entity
     span becomes its type; untagged spans keep the existing value."""

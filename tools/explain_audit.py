@@ -9,10 +9,29 @@ Prints one PASS/FAIL line per assertion plus the offending plan on FAIL.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+# CoNLL-2003 layout: word POS chunk IOB1-NER, blank line between sentences
+CONLL_SAMPLE = """-DOCSTART- -X- -X- O
+
+EU NNP I-NP I-ORG
+rejects VBZ I-VP O
+German JJ I-NP I-MISC
+call NN I-NP O
+. . O O
+
+Peter NNP I-NP I-PER
+Blackburn NNP I-NP I-PER
+
+BRUSSELS NNP I-NP I-LOC
+1996-08-22 CD I-NP O
+"""
 
 
 def plan_of(df) -> str:
@@ -171,14 +190,15 @@ def main() -> int:
 
     # 7. CoNLL reader scale shape: the sentence-grouping window is
     #    partitioned per input file — no single-partition global sort —
-    #    and the IOB1 decode is Arrow-batched, not row-at-a-time Python
+    #    and the IOB1 decode is Arrow-batched, not row-at-a-time Python.
+    #    Both are plan shape, so a few written sentences stand in for a
+    #    CoNLL-2003 corpus.
     from sherlock_spark.sources.conll import read_conll2003
 
-    plan = plan_of(
-        read_conll2003(
-            spark, "/root/reference/tests/fixtures/datasets/conll.txt"
-        )
-    )
+    with tempfile.TemporaryDirectory(prefix="explain_audit_conll_") as conll_dir:
+        with open(os.path.join(conll_dir, "conll.txt"), "w") as handle:
+            handle.write(CONLL_SAMPLE)
+        plan = plan_of(read_conll2003(spark, conll_dir))
     check(
         "conll reader: no single-partition Exchange (per-file window)",
         "Exchange SinglePartition" not in plan,
