@@ -4,7 +4,7 @@ Each Python-UDF task starts with pyspark's ``importlib.invalidate_caches()``
 (``worker_util.setup_spark_files``). Before Python 3.13 that makes every
 ``zipimporter`` on the worker's path re-read its archive's whole
 directory: ``pyspark.zip`` (1,328 entries) once per imported pyspark
-sub-package and the spark-core jar (5,359 entries) twice, 0.16-0.26 s of
+sub-package and the spark-core jar (5,359 entries) twice, 0.16-0.43 s of
 every task on 4 vCPU. The seam's first call in a worker guards that
 re-read, and worker reuse (``session.py``) keeps the guard across tasks.
 """
