@@ -25,9 +25,9 @@ def main() -> None:
     # stage writer, plans/checkpoint.CheckpointManager): stage tables
     # persist as code-digest-keyed parquet, so a SECOND fresh-JVM
     # bench run against the same dataset resumes warm instead of paying
-    # the 11-15 s kg_canonical_edges re-materialization. First run on
-    # new code still pays full cost (the digest changed). Export
-    # SHERLOCK_STAGE_DIR="" to disable.
+    # the 10-13 s kg_canonical_edges re-materialization (sf0.1, 4 vCPU).
+    # First run on new code still pays full cost (the digest changed).
+    # Export SHERLOCK_STAGE_DIR="" to disable.
     os.environ.setdefault("SHERLOCK_STAGE_DIR", "/tmp/sherlock_stage_cache")
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

@@ -86,26 +86,56 @@ def run_kg_pipeline(
     """
     manager = CheckpointManager(spark, out_dir)
     lexicon = DEFAULT_NER_LEXICON if ner_lexicon is None else ner_lexicon
-    labels = DEFAULT_RC_LABELS if rc_labels is None else rc_labels
+    stages = kg_stages(
+        spark,
+        transcripts,
+        manager.run_stage,
+        lexicon=lexicon,
+        labels=DEFAULT_RC_LABELS if rc_labels is None else rc_labels,
+        rule_map=rc_rule_map,
+        aliases=aliases if aliases is not None else default_aliases(lexicon),
+        entity_handling=entity_handling,
+        max_length=max_length,
+        max_mentions=max_mentions,
+        chunk_turns=chunk_turns,
+    )
+    return {**stages, "lineage": manager.all_lineage()}
+
+
+def kg_stages(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    run_stage: Callable[..., DataFrame],
+    *,
+    lexicon: dict[str, str],
+    labels: list[str],
+    rule_map: Optional[dict[tuple[str, str], str]],
+    aliases: list[tuple[str, str, str]],
+    entity_handling: str,
+    max_length: Optional[int],
+    max_mentions: int,
+    chunk_turns: int = 256,
+    dedup_model_inputs: bool = False,
+) -> dict[str, DataFrame]:
+    """The one definition of the KG stage graph: annotated, then triples
+    next to pair_overflow_metrics and links -> canonical_map, then nodes
+    next to edges. ``run_stage(name, build, dedup_keys=None)``
+    materializes one stage and returns it: ``CheckpointManager.run_stage``
+    for the pipeline, the session's ``udfcache.stage`` memo for the query
+    registry. ``transcripts`` is unsalted; the graph salts it.
+    """
 
     def build_annotated() -> DataFrame:
-        # The NER model stage — the dominant cost of the whole DAG at
-        # scale — materialized ONCE and consumed by every downstream
-        # builder. Round 5 rebuilt ``annotate_mentions`` inside the
-        # triples, links, AND pair-overflow builders, so a cold
-        # pipeline run paid the model forward over the full corpus
-        # three times; checkpointing the annotated table makes it
-        # exactly once per cold run (and zero on resume). Pruned to the
-        # columns downstream stages read (conv_id/turn_idx identity,
-        # words for surface slicing, ments) — text/raw columns stay out
-        # of the stage table.
+        # The NER model stage, the dominant cost of the DAG at scale, is
+        # materialized once and read by every downstream builder, pruned
+        # to the columns they read (text/raw columns stay out).
         salted = salt_by_conv(transcripts, chunk_turns)
         return annotate_mentions(spark, salted, lexicon).select(
             "conv_id", "turn_idx", "words", "ments"
         )
 
     # no conv_id repartition after the dedup: no reader needs that layout
-    annotated = manager.run_stage(
+    annotated = run_stage(
         "annotated", build_annotated, dedup_keys=["conv_id", "turn_idx"]
     )
 
@@ -114,20 +144,18 @@ def run_kg_pipeline(
             spark,
             annotated,
             labels=labels,
-            rule_map=rc_rule_map,
+            rule_map=rule_map,
             entity_handling=entity_handling,
             max_length=max_length,
             max_mentions=max_mentions,
+            dedup_model_inputs=dedup_model_inputs,
         )
-
-    alias_rows = aliases if aliases is not None else default_aliases(lexicon)
 
     def links_and_map() -> tuple[DataFrame, DataFrame]:
-        links = manager.run_stage(
-            "links",
-            lambda: linked_mentions(annotated, make_alias_df(spark, alias_rows)),
+        links = run_stage(
+            "links", lambda: linked_mentions(annotated, make_alias_df(spark, aliases))
         )
-        return links, manager.run_stage("canonical_map", lambda: canonicalize(links))
+        return links, run_stage("canonical_map", lambda: canonicalize(links))
 
     # Every stage after ``annotated`` is written as built, with no dedup
     # shuffle, because each table is unique on its key by construction:
@@ -144,10 +172,10 @@ def run_kg_pipeline(
     # other run side by side: their jobs are mostly fixed latency
     # (planning, scheduling, the write commit) that would otherwise queue.
     triples, pair_overflow, (links, canonical_map) = run_concurrently(
-        lambda: manager.run_stage("triples", build_triples),
+        lambda: run_stage("triples", build_triples),
         # counted overflow, not silent truncation (SURVEY §4): the
         # max_mentions cap of the pair explode lands in a metrics table
-        lambda: manager.run_stage(
+        lambda: run_stage(
             "pair_overflow_metrics",
             lambda: pair_overflow_stats(annotated, max_mentions),
         ),
@@ -155,8 +183,8 @@ def run_kg_pipeline(
     )
     graph = materialize_graph(triples, canonical_map)  # one plan, no job
     nodes, edges = run_concurrently(
-        lambda: manager.run_stage("nodes", lambda: graph[0]),
-        lambda: manager.run_stage("edges", lambda: graph[1]),
+        lambda: run_stage("nodes", lambda: graph[0]),
+        lambda: run_stage("edges", lambda: graph[1]),
     )
 
     return {
@@ -167,7 +195,6 @@ def run_kg_pipeline(
         "nodes": nodes,
         "edges": edges,
         "pair_overflow_metrics": pair_overflow,
-        "lineage": manager.all_lineage(),
     }
 
 

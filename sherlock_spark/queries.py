@@ -52,7 +52,7 @@ from sherlock_spark.operators.canonicalize import canonicalize, materialize_grap
 from sherlock_spark.operators.linking import linked_mentions, make_alias_df
 from sherlock_spark.operators.ner import annotate_mentions, with_tokens
 from sherlock_spark.operators.rc import enumerate_pairs, extract_triples
-from sherlock_spark.plans.pipeline import salt_by_conv
+from sherlock_spark.plans.pipeline import kg_stages, salt_by_conv
 from sherlock_spark.sources.transcripts import (
     transcripts_from_documents,
     transcripts_from_documents_sql,
@@ -250,17 +250,18 @@ SQL_KG_PAIRS = f"""
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship extraction. ``dedup_model_inputs=True`` (round-6): the
-    model forward runs over DISTINCT (subj_type, obj_type, subj_text,
-    obj_text) keys and predictions broadcast-join back — on this
-    transcript corpus the distinct-key table is ~100 rows vs 9.3M
-    pairs, so the per-pair Python stage (Arrow transfer + forward)
-    collapses to a partial-aggregated distinct + broadcast probe.
-    Results are pinned identical to the per-pair path by the shared
-    oracle (``kg_triples_dedup_inputs`` runs the per-pair path against
-    the same SQL; interleaved sf1 A/B: ~3.5-4.5 s vs ~5-6.7 s warm). The knob stays off by default in ``extract_triples`` —
-    on a high-cardinality corpus the distinct buys nothing — but agent
-    transcripts are exactly the heavy-repetition case it exists for."""
+    """Flagship extraction on the distinct-key model path
+    (``dedup_model_inputs=True``): the model forward runs over DISTINCT
+    (subj_type, obj_type, subj_text, obj_text) keys and the predictions
+    join back. ``kg_triples_dedup_inputs`` runs the per-pair path against
+    the same oracle, so the pair pins the knob as changing forward cost,
+    not results. Neither path wins everywhere: a ``noop`` write of
+    ``extract_triples`` on the staged annotated input, medians of 5
+    interleaved runs on 4 vCPU, took 0.34 s distinct-key against 0.28 s
+    per-pair at sf0.01, and 0.80 s against 1.13 s at sf0.1 (745,710
+    triples). The registry's
+    stage graph takes the distinct-key path; the pipeline's default is
+    per-pair."""
     triples = extract_triples(
         spark,
         _annotated(spark, sf_dir),
@@ -341,9 +342,7 @@ def q_kg_triples_dedup_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    alias_df = make_alias_df(spark, CANON_ALIASES)
-    links = linked_mentions(_annotated(spark, sf_dir), alias_df)
-    return links.select(
+    return _kg(spark, sf_dir)["links"].select(
         "conv_id",
         F.col("turn_idx").cast("long"),
         F.col("ment_idx").cast("long"),
@@ -364,67 +363,40 @@ SQL_KG_LINKS = f"""
 """
 
 
-def _kg_stages(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three expensive KG stages (NER annotation, link->CC
-    canonical map, triple extraction), each materialized ONCE per
-    (session, sf_dir) through the in-process stage registry
-    (``udfcache.stage``) — the resume pattern of ``plans/checkpoint.py``
-    applied to repeated query invocations: every later construction
-    (and the nodes-vs-edges branches) reads stage output instead of
-    re-running the model UDFs and the CC loop.
-    """
-    # NER output feeds both linking and extraction — pruned to the
-    # columns those stages read (drop text/tokens/bio)
-    annotated = stage(
-        spark,
-        ("kg_annotated", sf_dir),
-        lambda: _annotated(spark, sf_dir).select(
-            "conv_id", "turn_idx", "words", "ments"
-        ),
-    )
-    # the tiny canonical map is broadcast twice (subj + obj joins)
-    canonical_map = stage(
-        spark,
-        ("kg_canonical_map", sf_dir),
-        lambda: canonicalize(
-            linked_mentions(annotated, make_alias_df(spark, CANON_ALIASES))
-        ),
-    )
-    # triple extraction is the expensive stage — materialized once so
-    # the node/edge aggregations never re-run the model UDF; the
-    # distinct-key inference cache cuts its one-time build the same way
-    # it does q_kg_triples (identical output, oracle-pinned)
-    triples = stage(
-        spark,
-        ("kg_triples_stage", sf_dir),
-        lambda: extract_triples(
-            spark,
-            annotated,
-            labels=DEFAULT_RC_LABELS,
-            rule_map=None,
-            entity_handling="mark_entity",
-            max_length=None,
-            max_mentions=MAX_MENTIONS,
-            dedup_model_inputs=True,
-        ),
-    )
-    return annotated, canonical_map, triples
+def _kg(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The pipeline's KG stage graph (``plans.pipeline.kg_stages``) over
+    this scale's transcripts, each stage materialized once per (session,
+    sf_dir) through ``udfcache.stage``, so every later query reads stage
+    output instead of re-running the model UDFs and the CC loop. The
+    registry's own parameters: the oracle's alias table, no subword
+    budget (the oracle models none), and the distinct-key model path
+    (``kg_triples_dedup_inputs`` gates the per-pair one)."""
 
+    def run_stage(name, build, dedup_keys=None):
+        def built() -> DataFrame:
+            df = build()
+            return df.dropDuplicates(dedup_keys) if dedup_keys else df
 
-def _graph_tables(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared (nodes, edges) materialization over the checkpointed
-    stages of ``_kg_stages``."""
-    _annot, canonical_map, triples = _kg_stages(spark, sf_dir)
-    return materialize_graph(triples, canonical_map)
+        return stage(spark, ("kg", name, sf_dir), built)
+
+    return kg_stages(
+        spark,
+        transcripts_from_documents(_load(spark, sf_dir, "documents"), N_CONVS),
+        run_stage,
+        lexicon=DEFAULT_NER_LEXICON,
+        labels=DEFAULT_RC_LABELS,
+        rule_map=None,
+        aliases=CANON_ALIASES,
+        entity_handling="mark_entity",
+        max_length=None,
+        max_mentions=MAX_MENTIONS,
+        dedup_model_inputs=True,
+    )
 
 
 def q_kg_canonical_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated canonical EDGE table (north rule: node/edge tables)."""
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     return edges.select(
         "subj_id", "pred", "obj_id", F.col("n_evidence").cast("long")
     )
@@ -437,7 +409,7 @@ def q_kg_canonical_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     under it; surface_forms is pipe-joined so the driver's value hash
     compares a scalar string (array cell reprs differ between Arrow and
     DuckDB result frames)."""
-    nodes, _edges = _graph_tables(spark, sf_dir)
+    nodes = _kg(spark, sf_dir)["nodes"]
     return nodes.select(
         "canonical_id",
         "label",
@@ -2075,7 +2047,7 @@ def q_kg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph stages (no model re-run); one unpivot + hash aggregate."""
     from sherlock_spark.functions.graph import degree_stats
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     return degree_stats(
         edges.select("subj_id", "pred", "obj_id", F.col("n_evidence").cast("long"))
     )
@@ -2159,7 +2131,7 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle unrolls the identical recurrence as SQL CTEs."""
     from sherlock_spark.functions.graph import pagerank
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     ranks = pagerank(
         edges.select("subj_id", "obj_id"),
         iterations=_PR_ITERATIONS,
@@ -2181,7 +2153,7 @@ def q_kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form unrolled as CTE steps."""
     from sherlock_spark.functions.graph import bfs_depths
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     return bfs_depths(
         edges.select("subj_id", "obj_id"), max_hops=_BFS_MAX_HOPS
     )
@@ -2227,7 +2199,7 @@ def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration order, never the per-node counts."""
     from sherlock_spark.functions.graph import triangle_counts
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     return triangle_counts(edges.select("subj_id", "obj_id"))
 
 
@@ -2366,7 +2338,7 @@ def q_kg_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged edge table (no model re-run; one hash aggregation)."""
     from sherlock_spark.functions.graph import conflicting_objects
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     return conflicting_objects(
         edges.select("subj_id", "pred", "obj_id",
                      F.col("n_evidence").cast("long"))
@@ -2409,7 +2381,8 @@ def q_kg_edge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages; ONE hash aggregation on the resolved ids."""
     from sherlock_spark.operators.canonicalize import resolve_canonical_ids
 
-    _annot, canonical_map, triples = _kg_stages(spark, sf_dir)
+    kg = _kg(spark, sf_dir)
+    canonical_map, triples = kg["canonical_map"], kg["triples"]
     resolved = resolve_canonical_ids(triples, canonical_map)
     return resolved.groupBy("subj_id", "pred", "obj_id").agg(
         F.count("*").cast("long").alias("n_evidence"),
@@ -2893,7 +2866,7 @@ def q_kg_pred_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ontology review reads (and the data the functional-predicate
     conflict audit assumes). Three stacked hash aggregations over the
     canonical edges."""
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     per_subj = edges.groupBy("pred", "subj_id").agg(
         F.count_distinct("obj_id").alias("n_obj")
     )
@@ -3012,7 +2985,7 @@ def q_kg_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     centrality table. One extra tiny aggregation over kg_degree."""
     from sherlock_spark.functions.graph import degree_stats
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     deg = degree_stats(
         edges.select("subj_id", "pred", "obj_id", F.col("n_evidence").cast("long"))
     )
@@ -3168,7 +3141,7 @@ def q_kg_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     cc = connected_components(
         edges.select(
             F.col("subj_id").alias("src"), F.col("obj_id").alias("dst")
@@ -3899,7 +3872,8 @@ def q_kg_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity-set size, same blowup bound as mention pairs), and PMI =
     ln(c_ab * N / (c_a * c_b)) rounds to 4 before the compare. Pairs
     seen in fewer than 2 conversations are dropped (noise floor)."""
-    annotated, canonical_map, _trip = _kg_stages(spark, sf_dir)
+    kg = _kg(spark, sf_dir)
+    annotated, canonical_map = kg["annotated"], kg["canonical_map"]
     ments = annotated.select(
         "conv_id", F.explode("ments").alias("m"), "words"
     )
@@ -4232,7 +4206,8 @@ def q_kg_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     input unit (which conversations produce knowledge, which are
     barren). Two hash aggregations over checkpointed stages + one join
     on conv_id (left: barren conversations keep a 0 triple count)."""
-    annotated, _map, triples = _kg_stages(spark, sf_dir)
+    kg = _kg(spark, sf_dir)
+    annotated, triples = kg["annotated"], kg["triples"]
     turn_stats = annotated.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum(F.size("ments")).cast("long").alias("n_mentions"),
@@ -4289,7 +4264,7 @@ def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over the distinct undirected pairs."""
     from sherlock_spark.functions.graph import triangle_counts
 
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     e = edges.select("subj_id", "pred", "obj_id", "n_evidence")
     und = (
         e.filter(F.col("subj_id") != F.col("obj_id"))
@@ -4408,7 +4383,7 @@ def q_kg_reciprocal_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface patterns); a standard KG-quality sweep. One self-join of
     the (deduplicated, canonical) edge table on the swapped key;
     a < b keeps one row per unordered pair."""
-    _nodes, edges = _graph_tables(spark, sf_dir)
+    edges = _kg(spark, sf_dir)["edges"]
     e = edges.select("subj_id", "pred", "obj_id", "n_evidence")
     fwd = e.alias("f")
     rev = e.alias("r")
@@ -4453,7 +4428,8 @@ def q_kg_type_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages."""
     from sherlock_spark.operators.canonicalize import resolve_canonical_ids
 
-    _annot, canonical_map, triples = _kg_stages(spark, sf_dir)
+    kg = _kg(spark, sf_dir)
+    canonical_map, triples = kg["canonical_map"], kg["triples"]
     resolved = resolve_canonical_ids(triples, canonical_map)
     return resolved.groupBy("subj_type", "pred", "obj_type").agg(
         F.count("*").cast("long").alias("n_evidence"),

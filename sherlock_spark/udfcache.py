@@ -22,9 +22,9 @@ plan-stable and re-execution-free within a session:
     session-local ``localCheckpoint``. When ``SHERLOCK_STAGE_DIR`` is
     set, it is instead written through the one durable stage writer,
     ``plans/checkpoint.CheckpointManager``, under that directory, and a
-    fresh JVM resumes from it (cross-process warm resume: the 11-15 s
-    cold start of ``kg_canonical_edges`` drops to roughly its warm cost
-    on the second process). The durable stage name is
+    fresh JVM resumes from it (cross-process warm resume: the 10-13 s
+    cold start of ``kg_canonical_edges`` at sf0.1 on 4 vCPU drops to
+    roughly its warm cost on the second process). The durable stage name is
     ``config_hash(key, code_digest)``, where ``code_digest`` is a
     stat-based digest of every ``.py`` file in the package: ANY source
     edit changes the digest, so a persisted stage table never outlives
@@ -74,10 +74,11 @@ def _evict_dead_sessions(registry: dict, app_id: str) -> None:
     serial (getOrCreate reuses the live one), so any entry under a
     different applicationId references a dead context — holding its
     UDF closures/broadcasts/checkpointed RDDs would leak driver memory
-    in long-lived processes that restart sessions."""
-    dead = [key for key in registry if key[0] != app_id]
-    for key in dead:
-        del registry[key]
+    in long-lived processes that restart sessions. Iterates a snapshot
+    of the keys: ``stage`` runs on several threads at once under
+    ``plans.pipeline.run_concurrently``."""
+    for key in [key for key in list(registry) if key[0] != app_id]:
+        registry.pop(key, None)  # another thread may have dropped it
 
 
 def memoized_udf(spark: SparkSession, key: str, build: Callable):

@@ -161,3 +161,49 @@ def test_stage_cache_sweeps_expired_entries(spark, tmp_path, monkeypatch):
     assert not writer.is_complete("old")
     assert not os.path.exists(writer.stage_path("old"))
     assert writer.is_complete("fresh")
+
+
+def test_stage_registry_eviction_tolerates_concurrent_inserts():
+    """The registry's stages are built on several threads at once
+    (``run_concurrently``): evicting a dead session's entries must not
+    fail on an entry another thread inserts or evicts meanwhile."""
+    import sys
+    import threading
+
+    from sherlock_spark.udfcache import _evict_dead_sessions
+
+    registry = {("dead", i): i for i in range(2000)}
+    registry.update({("live", i): i for i in range(2000)})
+    errors = []
+    inserting = threading.Event()
+    inserting.set()
+
+    def insert(thread):
+        for i in range(20000):
+            registry[("live", thread, i)] = i
+        inserting.clear()
+
+    def evict():
+        try:
+            while True:
+                _evict_dead_sessions(registry, "live")
+                if not inserting.is_set():
+                    return
+        except (RuntimeError, KeyError) as exc:
+            errors.append(exc)
+
+    previous = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=insert, args=(n,)) for n in range(4)]
+        threads += [threading.Thread(target=evict) for _ in range(4)]
+        for thread in threads:
+            thread.start()
+        for thread in threads:
+            thread.join(timeout=120)
+    finally:
+        sys.setswitchinterval(previous)
+    assert not any(thread.is_alive() for thread in threads)
+    assert errors == []
+    assert all(key[0] == "live" for key in registry)
+    assert len(registry) == 2000 + 4 * 20000

@@ -30,13 +30,17 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# the read-only generated tables (TESTDATA.md)
+TESTDATA_DIR = "/root/testdata"
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -69,84 +73,95 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
-def gate_one_scale(
-    spark, queries, oracles, sf_dir: str, only: set[str]
-) -> tuple[dict, list[str], list[str]]:
-    """Run the full registry at one scale. Returns (per-query records in
-    the driver's CORRECTNESS schema, failure names, vacuous names)."""
+def duckdb_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``."""
     con = duckdb.connect()
     for table in TABLES:
         con.sql(
             f"CREATE VIEW {table} AS SELECT * FROM '{sf_dir}/{table}.parquet'"
         )
+    return con
 
+
+def check_query(spark, con, query, oracle: str | None, sf_dir: str) -> dict:
+    """Run one query on Spark and its oracle on ``con``; return its
+    record in the driver's CORRECTNESS schema."""
+    record = {
+        "rows_match": False,
+        "schema_match": False,
+        "hash_match": False,
+        "spark_rows": None,
+        "oracle_rows": None,
+        "err": None,
+    }
+    try:
+        spark_df = query(spark, sf_dir).toPandas()
+        record["spark_rows"] = len(spark_df)
+        if oracle is None:
+            # rows-only check, mirroring the driver's weaker gate
+            record.update(rows_match=True, schema_match=True, hash_match=True)
+            return record
+        oracle_df = con.sql(oracle).df()
+        record["oracle_rows"] = len(oracle_df)
+        record["rows_match"] = len(spark_df) == len(oracle_df)
+        record["schema_match"] = sorted(spark_df.columns) == sorted(
+            oracle_df.columns
+        )
+        if record["rows_match"] and record["schema_match"]:
+            record["hash_match"] = value_hash(spark_df) == value_hash(oracle_df)
+    except Exception as exc:  # noqa: BLE001 — gate must report, not die
+        record["err"] = f"{type(exc).__name__}: {exc}"[:500]
+    return record
+
+
+def verdict(name: str, record: dict) -> tuple[str, str]:
+    """``("OK ", "")``, ``("VACU", note)`` for a 0-row oracle not in
+    ``EMPTY_OK``, or ``("FAIL", problems)``."""
+    if not (
+        record["err"] is None
+        and record["rows_match"]
+        and record["schema_match"]
+        and record["hash_match"]
+    ):
+        if record["err"]:
+            return "FAIL", record["err"]
+        problems = []
+        if not record["rows_match"]:
+            problems.append(
+                f"rows {record['spark_rows']} != {record['oracle_rows']}"
+            )
+        if not record["schema_match"]:
+            problems.append("schema mismatch")
+        if record["rows_match"] and record["schema_match"]:
+            problems.append("value-hash mismatch")
+        return "FAIL", "; ".join(problems)
+    if record["oracle_rows"] == 0 and name not in EMPTY_OK:
+        return "VACU", "oracle returned 0 rows — pins nothing"
+    return "OK ", ""
+
+
+def gate_one_scale(
+    spark, queries, oracles, sf_dir: str, only: set[str]
+) -> tuple[dict, list[str], list[str]]:
+    """Run the full registry at one scale. Returns (per-query records in
+    the driver's CORRECTNESS schema, failure names, vacuous names)."""
+    con = duckdb_views(sf_dir)
     records: dict[str, dict] = {}
     failures: list[str] = []
     vacuous: list[str] = []
     for name in sorted(queries):
         if only and name not in only:
             continue
-        record = {
-            "rows_match": False,
-            "schema_match": False,
-            "hash_match": False,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        try:
-            spark_df = queries[name](spark, sf_dir).toPandas()
-            record["spark_rows"] = len(spark_df)
-            if name not in oracles:
-                # rows-only check, mirroring the driver's weaker gate
-                record.update(
-                    rows_match=True, schema_match=True, hash_match=True,
-                    oracle_rows=None,
-                )
-                records[name] = record
-                print(f"{name:34s} rows-only: {len(spark_df)} rows (no oracle)")
-                continue
-            oracle_df = con.sql(oracles[name]).df()
-            record["oracle_rows"] = len(oracle_df)
-            record["rows_match"] = len(spark_df) == len(oracle_df)
-            record["schema_match"] = sorted(spark_df.columns) == sorted(
-                oracle_df.columns
-            )
-            if record["rows_match"] and record["schema_match"]:
-                record["hash_match"] = value_hash(spark_df) == value_hash(
-                    oracle_df
-                )
-        except Exception as exc:  # noqa: BLE001 — gate must report, not die
-            record["err"] = f"{type(exc).__name__}: {exc}"[:500]
-        records[name] = record
-
-        ok = (
-            record["err"] is None
-            and record["rows_match"]
-            and record["schema_match"]
-            and record["hash_match"]
+        record = records[name] = check_query(
+            spark, con, queries[name], oracles.get(name), sf_dir
         )
-        empty = record["oracle_rows"] == 0 and name not in EMPTY_OK
-        status = "OK " if ok else "FAIL"
-        note = ""
-        if ok and empty:
-            status, note = "VACU", "oracle returned 0 rows — pins nothing"
-            vacuous.append(name)
-        if not ok:
+        status, note = verdict(name, record)
+        if status == "FAIL":
             failures.append(name)
-            problems = []
-            if record["err"]:
-                problems.append(record["err"])
-            else:
-                if not record["rows_match"]:
-                    problems.append(
-                        f"rows {record['spark_rows']} != {record['oracle_rows']}"
-                    )
-                if not record["schema_match"]:
-                    problems.append("schema mismatch")
-                if record["rows_match"] and record["schema_match"]:
-                    problems.append("value-hash mismatch")
-            note = "; ".join(problems)
+        elif status == "VACU":
+            vacuous.append(name)
+        elif name not in oracles:
+            note = "(no oracle)"
         print(
             f"{name:34s} {status} {record['spark_rows'] or 0:7d} rows  {note}"
         )
@@ -168,7 +183,7 @@ def main() -> int:
         " #4)",
     )
     args = parser.parse_args()
-    sf_dirs = args.sf_dirs or ["/root/testdata/sf0.01"]
+    sf_dirs = args.sf_dirs or [f"{TESTDATA_DIR}/sf0.01"]
     only = set(q for q in args.only.split(",") if q)
 
     import __spark_entry__ as entry_mod
